@@ -8,6 +8,16 @@ import org.apache.spark.sql.functions._
   * functions over the staged schemas — every processed artifact is one
   * query. Scale shape notes inline; all aggregates are partial-agg
   * friendly and the only windows are per-key rank windows.
+  *
+  * The sorted reports (`cityRiskDistribution`, `pollutionTrends`,
+  * `histogram`, `topCitiesHourlyPm25`, `hourlyAvgTemp`) coalesce to one
+  * partition before their final `orderBy`. A global sort over a
+  * single-partition child needs no range exchange, so each report saves
+  * the range partitioner's sampling job and the exchange's map job. The
+  * partial aggregates and their hash exchange stay parallel; only the
+  * final merge and sort of a report-sized frame run in one task, and
+  * `Sinks.reportCsv` funnels the CSV into one task anyway, so the
+  * written bytes and row order are unchanged.
   */
 object Analysis {
 
@@ -15,24 +25,32 @@ object Analysis {
     * / aqi_pm25 when the column is absent or entirely null, and null-fill
     * any missing pollutant column first
     * (ETL_Multi_Lvl_API/etl_analysis.py:146-165). The "all null" probe is
-    * one tiny aggregate job over the needed columns only. */
+    * ONE aggregate job counting every derived column present. That is
+    * exact: re-deriving severity does not change the non-null counts of
+    * risk_class or aqi_pm25, so all three can be read off the input. */
   def ensureDerived(df0: DataFrame): DataFrame = {
     val df = Schemas.pollutants.foldLeft(df0)((d, c) =>
       if (d.schema.fieldNames.contains(c)) d
       else d.withColumn(c, lit(null).cast("double")))
-    def missingOrAllNull(d: DataFrame, c: String): Boolean =
-      !d.schema.fieldNames.contains(c) ||
-        d.agg(count(col(c))).head().getLong(0) == 0L
+    val present = Seq("severity", "risk_class", "aqi_pm25")
+      .filter(df.schema.fieldNames.contains)
+    val nonNull: Map[String, Long] =
+      if (present.isEmpty) Map.empty
+      else {
+        val r = df.agg(count(col(present.head)), present.tail.map(c => count(col(c))): _*).head()
+        present.zipWithIndex.map { case (c, i) => c -> r.getLong(i) }.toMap
+      }
+    def missingOrAllNull(c: String): Boolean = nonNull.getOrElse(c, 0L) == 0L
     val withSev =
-      if (missingOrAllNull(df, "severity"))
+      if (missingOrAllNull("severity"))
         df.withColumn("severity", Features.severity(col("pm2_5"), col("pm10"),
           col("nitrogen_dioxide"), col("sulphur_dioxide"), col("carbon_monoxide"), col("ozone")))
       else df
     val withRisk =
-      if (missingOrAllNull(withSev, "risk_class"))
+      if (missingOrAllNull("risk_class"))
         withSev.withColumn("risk_class", Features.riskClass(col("severity")))
       else withSev
-    if (missingOrAllNull(withRisk, "aqi_pm25"))
+    if (missingOrAllNull("aqi_pm25"))
       withRisk.withColumn("aqi_pm25", Features.aqiCategory(col("pm2_5")))
     else withRisk
   }
@@ -63,7 +81,7 @@ object Analysis {
       .withColumn("pct_high", col("High Risk") / col("total_hours") * 100)
       .withColumn("pct_moderate", col("Moderate Risk") / col("total_hours") * 100)
       .withColumn("pct_low", col("Low Risk") / col("total_hours") * 100)
-      .orderBy(col("city"))
+      .coalesce(1).orderBy(col("city"))
 
   /** pollution_trends.csv — A4 dedup-mean at (city,time) + O1 sort
     * (ETL_Multi_Lvl_API/etl_analysis.py:248-262). */
@@ -71,7 +89,7 @@ object Analysis {
     val p = Schemas.pollutants.filter(_ != "uv_index")
     aq.groupBy(col("city"), col("time"))
       .agg(p.map(c => avg(col(c)).as(c)).head, p.map(c => avg(col(c)).as(c)).tail: _*)
-      .orderBy(col("city"), col("time"))
+      .coalesce(1).orderBy(col("city"), col("time"))
   }
 
   /** A9 — equal-width histogram over non-null values, matplotlib bin
@@ -89,7 +107,7 @@ object Analysis {
         floor((col("v") - col("mn")) / ((col("mx") - col("mn")) / bins.toDouble)),
         lit((bins - 1).toDouble))).cast("int"))
       .groupBy(col("bin")).agg(count(lit(1)).as("n"))
-      .orderBy(col("bin"))
+      .coalesce(1).orderBy(col("bin"))
   }
 
   /** analysis_summary.csv — A1 grand aggregate over weather_staged
@@ -107,7 +125,7 @@ object Analysis {
   def hourlyAvgTemp(weather: DataFrame): DataFrame =
     weather.groupBy(col("date"), col("hour"))
       .agg(avg(col("temperature_c")).as("avg_temperature_c"))
-      .orderBy(col("date"), col("hour"))
+      .coalesce(1).orderBy(col("date"), col("hour"))
 
   /** hourly_pm2_5_trends data — O3 top-k cities by record count, then W1
     * tumbling-hour mean per kept city
@@ -121,6 +139,6 @@ object Analysis {
       .groupBy(col("city"), window(col("time"), "1 hour").as("w"))
       .agg(avg(col("pm2_5")).as("avg_pm2_5"))
       .select(col("city"), col("w.start").as("hour_start"), col("avg_pm2_5"))
-      .orderBy(col("city"), col("hour_start"))
+      .coalesce(1).orderBy(col("city"), col("hour_start"))
   }
 }

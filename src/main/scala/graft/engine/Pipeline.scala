@@ -25,9 +25,16 @@ object Pipeline {
 
   /** Air quality: raw glob -> staged parquet (upserted on (city,time),
     * idempotent across reruns like the reference's ON CONFLICT load) ->
-    * report CSVs. Mirrors ETL_Multi_Lvl_API/etl_pipeline.py:108-133. */
+    * report CSVs. Mirrors ETL_Multi_Lvl_API/etl_pipeline.py:108-133.
+    *
+    * No `Analysis.ensureDerived` probe runs here: `aqStage`'s shared tail
+    * (`Pipelines.finishAq`) already derives aqi_pm25, severity and
+    * risk_class with the same `Features` formulas, and none of the three
+    * can be null (severity is coalesce-to-0 arithmetic, the two labels
+    * always return one). The probe would be the identity on this frame
+    * and would cost one JSON re-parse per batch. */
   def runAq(spark: SparkSession, rawGlob: String, outDir: String): Unit = {
-    val staged = Analysis.ensureDerived(Pipelines.aqStage(spark, rawGlob))
+    val staged = Pipelines.aqStage(spark, rawGlob)
     Sinks.upsertParquet(spark, staged, s"$outDir/staged/air_quality",
       keys = Seq("city", "time"))
     val back = spark.read.parquet(s"$outDir/staged/air_quality")

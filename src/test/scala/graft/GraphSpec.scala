@@ -53,28 +53,6 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  /** Jobs submitted while `body` runs (AQE submits several per round, so
-    * absolute counts are config-dependent; RATIOS across inputs are not). */
-  private def countingJobs[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val out = try body finally {
-      // drain the async bus deterministically (vs a fixed sleep, which
-      // both undercounts under load and wastes half a second per call).
-      // A drain timeout must neither mask the body's real exception nor
-      // skip the listener removal (it would leak into later tests).
-      try org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext, 30000)
-      catch { case scala.util.control.NonFatal(_) => () }
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    (out, jobs.get)
-  }
-
   test("pointer jumping: DEFAULT-path job count grows ~log(depth), not linearly") {
     def chain(n: Long) = (1L to n).sliding(2).map(s => (s(1), s(0))).toSeq
     // default maxIter = 50: propagation alone could not even finish the

@@ -813,4 +813,32 @@ class PlanAuditSpec extends SparkSpec {
       p.toLowerCase.contains("partial_") && p.toLowerCase.contains("topkagg"),
       s"expect a partial TopKAgg before the exchange")
   }
+
+  test("sorted pipeline reports: the final sort runs in one partition, no range exchange") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.engine.{Analysis, Pipelines}
+    def framePlan(df: DataFrame): String = {
+      spark.catalog.clearCache()
+      df.count() // let AQE finalize
+      df.queryExecution.executedPlan.toString.toLowerCase
+    }
+    val aq = Pipelines.aqStage(spark, Fixtures.aqRaw)
+    val weather = Pipelines.weatherStage(spark,
+      Fixtures.weatherRaw(Files.createTempDirectory("weather-raw").toString, days = 2))
+    // control: the retired orderBy-only shape does plan a range exchange
+    assert(framePlan(aq.groupBy(col("city")).count().orderBy(col("city")))
+      .contains("rangepartitioning"), "the control must show what the audit looks for")
+    Seq(
+      "cityRiskDistribution" -> Analysis.cityRiskDistribution(aq),
+      "pollutionTrends" -> Analysis.pollutionTrends(aq),
+      "histogram" -> Analysis.histogram(aq, col("pm2_5"), 40),
+      "topCitiesHourlyPm25" -> Analysis.topCitiesHourlyPm25(aq),
+      "hourlyAvgTemp" -> Analysis.hourlyAvgTemp(weather)
+    ).foreach { case (name, df) =>
+      val p = framePlan(df)
+      assert(!p.contains("rangepartitioning"), s"$name sorts behind a range exchange:\n$p")
+    }
+  }
 }

@@ -31,17 +31,19 @@ def _run_delay_ns() -> int:
     process's threads — the same /proc/self/task/*/schedstat gauge
     graft.Bench samples, so the DuckDB sessions carry a contention
     gauge symmetric to the Spark sessions' rq_ms (r21 ADVICE: a
-    one-sided gate could only bias the published ratio). -1 off-Linux."""
-    try:
-        total = 0
-        for p in glob.glob("/proc/self/task/*/schedstat"):
-            try:
-                total += int(open(p).read().split()[1])
-            except (OSError, IndexError, ValueError):
-                pass
-        return total
-    except OSError:
+    one-sided gate could only bias the published ratio). -1 off-Linux,
+    and -1 when no schedstat file is found: an unread gauge must not read
+    as a measured 0 (no run-queue delay)."""
+    paths = glob.glob("/proc/self/task/*/schedstat")
+    if not paths:
         return -1
+    total = 0
+    for p in paths:
+        try:
+            total += int(open(p).read().split()[1])
+        except (OSError, IndexError, ValueError):
+            pass
+    return total
 
 
 def _box_self_jiffies():

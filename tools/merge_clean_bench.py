@@ -15,8 +15,9 @@ the caller discards it and redraws a fresh session, so the published
 medians are medians of QUIET sessions instead of carrying a disturbed
 window (r20 kept a 549 s session in the median; its q123 sample read
 122.6 s vs 14.3/15.9 in the quiet sessions). The per-session gauges
-are emitted as session_rq_ms either way, so the quietness claim is
-auditable off the artifact.
+are emitted as session_rq_ms either way (null for a session in which
+any query lacks the gauge), so the quietness claim is auditable off the
+artifact.
 """
 import json
 import statistics
@@ -40,10 +41,12 @@ def main() -> None:
         # table silently and misstate the published config
         assert s["sf"] == sessions[0]["sf"], "sessions ran different sf dirs"
         assert s.get("iters") == sessions[0].get("iters"), "sessions ran different iters"
-    # q.get(): sidecars predating the per-query rq gauge must still merge
-    # when the gate is not requested (r21 ADVICE — a bare q["rq_ms"] was a
-    # silent tightening of the accepted input format)
-    session_rq = [round(sum(max(q.get("rq_ms", 0.0), 0.0) for q in s["queries"]), 1)
+    # sidecars predating the per-query rq gauge must still merge when the
+    # gate is not requested (r21 ADVICE — a bare q["rq_ms"] was a silent
+    # tightening of the accepted input format); such a session's gauge is
+    # null, not a sum that reads as a measured quiet session
+    session_rq = [round(sum(max(q["rq_ms"], 0.0) for q in s["queries"]), 1)
+                  if all("rq_ms" in q for q in s["queries"]) else None
                   for s in sessions]
     if max_rq_ms is not None:
         missing = [p for p, s in zip(session_paths, sessions)
