@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Timed executions materialize EVERY column through the v2 noop sink
     * instead of count(): Catalyst is entitled to — and does — collapse a
@@ -17,18 +16,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // median-of-N mode: the box's run-to-run variance (±20%) exceeds most
     // micro-optimizations, so regressions are only claimable off medians
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "1").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.engine.Tables.NanosFlag, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Per-query spill/shuffle accounting (r15 finding #1: q71's driver
     // reading ran 4.3x its clean median with ext_cpu 0 and rq_ms 0 —
     // the suspected mechanism is shuffle-spill / page-cache state left

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deep-chain soak for the two connected-components variants: the
@@ -24,13 +23,7 @@ object GraphSoak {
   def main(args: Array[String]): Unit = {
     val chains = if (args.nonEmpty) args(0).toInt else 100
     val depth = if (args.length > 1) args(1).toInt else 10000
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit =

@@ -10,8 +10,8 @@ package graft
   *
   * Plans are the cold-catalog initial plans (AdaptiveSparkPlan
   * isFinalPlan=false where AQE applies) over the given SF dir — the
-  * same session shape Bench uses (shuffle.partitions = cpus, UTC,
-  * nanos flag). Dev harness — not part of the driver contract surface.
+  * same [[LocalSession]] Bench uses. Dev harness — not part of the
+  * Bench/Verify CLI contract.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,15 +19,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.engine.Tables.NanosFlag, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val names = if (args.length > 1)
       args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     else SparkEntry.queries.keys.toSeq.sorted

@@ -112,14 +112,7 @@ object ScaleSoak {
     // 100M-row lineitem it never reads
     val tables = if (args.length > 4) args(4).split(",").toSeq
                  else graft.engine.Tables.all
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.engine.Tables.NanosFlag, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     // marker records the generation params: a partial earlier run or a
     // different reps value must regenerate, not silently reuse stale data
     val marker = java.nio.file.Paths.get(out, "_SOAK_MARKER")

@@ -59,14 +59,7 @@ object StreamSoak {
     val nBatches = if (args.length > 2) args(2).toInt else 12
     val ooo = args.length > 3 && args(3) == "ooo"
     val media = args.length > 3 && args(3) == "media"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.engine.Tables.NanosFlag, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     // fresh work dir: stale checkpoints/stores would turn triggers into no-ops
     val workPath = java.nio.file.Paths.get(work)
     if (java.nio.file.Files.exists(workPath)) {

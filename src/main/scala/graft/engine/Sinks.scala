@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.io.IOException
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,21 +41,21 @@ object Sinks {
   }
 
   /** S11 — upsert semantics (INSERT .. ON CONFLICT (keys) DO UPDATE) as
-    * a deterministic last-write-wins merge: union the incoming batch
-    * with the existing table and keep, per key, the row with the highest
-    * `orderCol` (ties broken toward the incoming batch). row_number over
-    * an explicit order — NOT bare dropDuplicates, which is
-    * nondeterministic under parallelism (SURVEY.md §7.4).
+    * a deterministic last-write-wins merge ([[lastWriteWins]]) of the
+    * incoming batch into the existing table, rewritten whole and
+    * committed with [[swapIn]] under the store's writer fence.
     * Reference: ETL_Multi_Lvl_API/load.py:117-163. */
   def upsertParquet(spark: SparkSession, batch: DataFrame, path: String,
-                    keys: Seq[String], orderCol: Option[String] = None): Unit = {
-    // FileSystem of the TARGET path's scheme, not the default FS — an
-    // s3a:// or hdfs:// target must not resolve against file://
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, path) {
-      upsertWholeTableLocked(spark, batch, path, keys, orderCol, dst, fs)
+                    keys: Seq[String], orderCol: Option[String] = None): Unit =
+    withStoreFences(spark, Seq(path)) {
+      upsertWholeTableLocked(spark, batch, path, keys, orderCol)
     }
+
+  /** `path` and the FileSystem of ITS scheme, not the default FS — an
+    * s3a:// or hdfs:// store must not resolve against file://. */
+  private def pathAndFs(spark: SparkSession, path: String): (Path, FileSystem) = {
+    val p = new Path(path)
+    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
   /** S11 (wire-protocol flavor) — keyed UPSERT against a REAL JDBC
@@ -142,65 +144,82 @@ object Sinks {
     }
   }
 
-  /** Restore a whole-table store stranded at `<path>_old` by a writer
-    * that crashed between its two swap renames. Shared by
-    * [[upsertWholeTableLocked]] and every fenced caller that READS the
-    * store before merging into it (e.g. the streaming HLL register
-    * sink): a reader gating on `fs.exists(dst)` alone would see the
-    * orphaned store as absent, merge against nothing, and the
-    * subsequent upsert's own recovery would restore the orphan only to
-    * overwrite it — silently dropping all previously merged state.
-    * Call inside the store's writer fence. */
-  private[graft] def restoreWholeTableOrphan(fs: org.apache.hadoop.fs.FileSystem,
-                                             path: String,
-                                             dst: org.apache.hadoop.fs.Path): Unit = {
-    val orphan = new org.apache.hadoop.fs.Path(path + "_old")
+  /** Restore a store stranded at `<path>_old` by a writer that crashed
+    * between the two renames of its whole-store [[swapIn]] (the
+    * whole-table upsert, or a rebucket of a partition-scoped store).
+    * Call inside the store's writer fence, BEFORE anything reads or
+    * gates on the store: a caller checking `fs.exists(dst)` alone would
+    * see the orphaned store as absent, merge against nothing, and the
+    * next swap would drop `_old` — silently losing all previously
+    * merged state. */
+  private def restoreWholeTableOrphan(fs: FileSystem, path: String, dst: Path): Unit = {
+    val orphan = new Path(path + "_old")
     if (!fs.exists(dst) && fs.exists(orphan) && !fs.rename(orphan, dst))
-      throw new java.io.IOException(s"upsertParquet: cannot restore $orphan to $dst")
+      throw new IOException(s"cannot restore $orphan to $dst")
+  }
+
+  /** The rename-aside swap every store writer commits with: move `live`
+    * ASIDE (not delete-then-rename), rename `fresh` into its place, and
+    * only then drop `aside`. A crash between the two renames therefore
+    * leaves a complete copy at `aside` and nothing at `live`, which the
+    * next fenced entry restores ([[restoreWholeTableOrphan]] for a whole
+    * store at `<path>_old`, [[recoverPartitionedLocked]] for a bucket at
+    * `.aside_gbucket=N`). A failed second rename puts `live` back before
+    * throwing. An `aside` present on entry is a stale copy from a crash
+    * after its fresh data landed (recovery restores only when `live` is
+    * missing) and is dropped. An absent `fresh` removes `live`: a delete
+    * that emptied a bucket; callers whose output must exist check it
+    * first. Call inside the store's writer fence. */
+  private def swapIn(fs: FileSystem, fresh: Path, live: Path, aside: Path): Unit = {
+    fs.delete(aside, true)
+    val had = fs.exists(live)
+    if (had && !fs.rename(live, aside))
+      throw new IOException(s"cannot move $live aside to $aside")
+    if (fs.exists(fresh) && !fs.rename(fresh, live)) {
+      if (had) fs.rename(aside, live)
+      throw new IOException(s"cannot move $fresh into place at $live")
+    }
+    fs.delete(aside, true)
+  }
+
+  /** The upsert rule of both stores: per key, over `existing` ∪
+    * `incoming` (existing side first, which fixes the plan and the
+    * output bytes), keep the row with the highest `orderCol`, the
+    * incoming row on ties / by default. row_number over an explicit
+    * order — NOT bare dropDuplicates, which is nondeterministic under
+    * parallelism (SURVEY.md §7.4). */
+  private def lastWriteWins(existing: Option[DataFrame], incoming: DataFrame,
+                            keys: Seq[String], orderCol: Option[String]): DataFrame = {
+    val batch = incoming.withColumn("_is_new", lit(1))
+    val all = existing.fold(batch)(_.withColumn("_is_new", lit(0)).unionByName(batch))
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(orderCol.map(c => col(c).desc).toSeq :+ col("_is_new").desc: _*)
+    all.withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1).drop("_rn", "_is_new")
+  }
+
+  /** The whole-table store at `path` after crash recovery, or None when
+    * it is absent — for fenced callers (the upsert, the streaming HLL
+    * register sink) that read the store before merging into it. "Absent"
+    * is ONLY fs.exists == false: a transient read failure (corrupt
+    * footer, FS hiccup) must propagate — treating it as absent would
+    * silently replace the table with the batch alone. Call inside the
+    * store's writer fence. */
+  private[graft] def readWholeTableLocked(spark: SparkSession, path: String): Option[DataFrame] = {
+    val (dst, fs) = pathAndFs(spark, path)
+    restoreWholeTableOrphan(fs, path, dst)
+    if (fs.exists(dst)) Some(spark.read.parquet(path)) else None
   }
 
   private[graft] def upsertWholeTableLocked(spark: SparkSession, batch: DataFrame, path: String,
-                                     keys: Seq[String], orderCol: Option[String],
-                                     dst: org.apache.hadoop.fs.Path,
-                                     fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val orphan = new org.apache.hadoop.fs.Path(path + "_old")
-    // crash recovery: a previous run that died between its two swap
-    // renames leaves the table at _old and nothing at dst — restore it
-    // BEFORE reading, or the merge below would see an absent table and
-    // the _old cleanup would erase the only surviving copy
-    restoreWholeTableOrphan(fs, path, dst)
-    // "table absent" is ONLY fs.exists == false. A transient read
-    // failure (corrupt footer, FS hiccup) must propagate — treating it
-    // as absent would silently replace the table with the batch alone.
-    val existing =
-      if (fs.exists(dst)) Some(spark.read.parquet(path).withColumn("_is_new", lit(0)))
-      else None
-    val all = existing match {
-      case Some(e) => e.unionByName(batch.withColumn("_is_new", lit(1)))
-      case None    => batch.withColumn("_is_new", lit(1))
-    }
-    // conflict winner: highest recency column if given, the incoming
-    // batch on ties / by default (ON CONFLICT DO UPDATE semantics)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(orderCol.map(c => col(c).desc).toSeq :+ col("_is_new").desc: _*)
-    val merged = all.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1).drop("_rn", "_is_new")
+                                            keys: Seq[String], orderCol: Option[String]): Unit = {
+    val merged = lastWriteWins(readWholeTableLocked(spark, path), batch, keys, orderCol)
     // parquet overwrite of the path being read requires a materialization
-    // barrier: write to a sibling, then swap. The swap renames the old
-    // dir ASIDE (not delete-then-rename) so a crash mid-swap leaves a
-    // recoverable copy; old is deleted only after the new rename lands.
-    val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
+    // barrier: write to a sibling, then swap
+    val (dst, fs) = pathAndFs(spark, path)
+    val tmp = new Path(path + "_tmp")
     merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(orphan, true) // leftover _old with dst present = stale copy
-    val hadExisting = fs.exists(dst)
-    if (hadExisting && !fs.rename(dst, orphan))
-      throw new java.io.IOException(s"upsertParquet: cannot move $dst aside to $orphan")
-    if (!fs.rename(tmp, dst)) {
-      // restore the previous table before failing
-      if (hadExisting) fs.rename(orphan, dst)
-      throw new java.io.IOException(s"upsertParquet: cannot move $tmp into place at $dst")
-    }
-    fs.delete(orphan, true)
+    swapIn(fs, tmp, dst, new Path(path + "_old"))
   }
 
   /** Partition column of the partition-scoped upsert store. No leading
@@ -336,17 +355,15 @@ object Sinks {
     * concurrent merge, or this call) rather than blocking — no ordering
     * deadlock is possible. Inside `body`, mutate the fenced stores only
     * through the `...Locked` variants; the public entry points would
-    * re-acquire a fence this call already holds and throw. */
+    * re-acquire a fence this call already holds and throw (each of them
+    * is its `...Locked` variant inside this call over its one store). */
   def withStoreFences[T](spark: SparkSession, paths: Seq[String])(body: => T): T = {
     require(paths.nonEmpty, "withStoreFences needs at least one store path")
     require(paths.distinct.size == paths.size,
       s"duplicate store paths would self-deadlock the fence: $paths")
     def nest(remaining: Seq[String]): T = remaining match {
       case Seq() => body
-      case p +: rest =>
-        val dst = new org.apache.hadoop.fs.Path(p)
-        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        withWriterLock(fs, p)(nest(rest))
+      case p +: rest => withWriterLock(pathAndFs(spark, p)._2, p)(nest(rest))
     }
     nest(paths.sorted)
   }
@@ -389,10 +406,8 @@ object Sinks {
     *   2. reads ONLY those partitions (partition-pruned scan — untouched
     *      data is never read),
     *   3. runs the same last-write-wins window within them,
-    *   4. swaps ONLY the touched `gbucket=N` directories, each with the
-    *      rename-aside protocol of [[upsertParquet]] (aside copy under a
-    *      dot-prefixed name, restore-on-entry) — untouched partition
-    *      files are never rewritten.
+    *   4. swaps ONLY the touched `gbucket=N` directories, each with
+    *      [[swapIn]] — untouched partition files are never rewritten.
     *
     * Merge cost is O(batch + touched partitions), not O(table). Size
     * `numBuckets` so one bucket ≈ a comfortable task read (e.g. 100 TB /
@@ -409,12 +424,10 @@ object Sinks {
     require(numBuckets > 0, "numBuckets must be positive")
     require(!batch.columns.contains(BucketCol),
       s"batch already has a '$BucketCol' column — it is reserved for the store layout")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // fence FIRST: entry recovery itself mutates the store, so even the
     // recovery scan must not run under a concurrent writer
-    withWriterLock(fs, path) {
-      mergePartitionedLocked(spark, batch, path, keys, orderCol, numBuckets, dst, fs)
+    withStoreFences(spark, Seq(path)) {
+      upsertParquetPartitionedLocked(spark, batch, path, keys, orderCol, numBuckets)
     }
   }
 
@@ -430,52 +443,113 @@ object Sinks {
                                                     path: String, keys: Seq[String],
                                                     orderCol: Option[String] = None,
                                                     numBuckets: Int = 64): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    mergePartitionedLocked(spark, batch, path, keys, orderCol, numBuckets, dst, fs)
+    val (dst, fs) = pathAndFs(spark, path)
+    val tmpRoot = new Path(path + "_tmp")
+    recoverPartitionedLocked(fs, path, dst)
+    fs.delete(tmpRoot, true)
+    val meta = new Path(dst, MetaFile)
+    val n = if (fs.exists(meta)) {
+      val (storedN, storedKeys) = readMeta(fs, meta)
+      if (storedKeys.nonEmpty && storedKeys != keys)
+        throw new IllegalArgumentException(
+          s"upsert store at $path was created with keys ${storedKeys.mkString(",")}; " +
+            s"merging with ${keys.mkString(",")} would mis-bucket rows")
+      storedN
+    } else numBuckets
+    // the batch plan is consumed twice below (touched-bucket scoping,
+    // then the merge/creation write) and sink batches are often the
+    // tail of an expensive pipeline (the curation sink's is an LSH
+    // probe chain) — pin it so the second consumer reads the cache
+    // instead of recomputing the whole chain. MEMORY_AND_DISK default:
+    // batches are micro-batch sized by the sink contract, and a large
+    // one degrades to a disk spill, not an OOM.
+    val keyed = batch.withColumn(BucketCol,
+      pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int")).persist()
+    try {
+      if (!fs.exists(meta)) {
+        // creation overwrites dst, so it must never run over a directory
+        // that is NOT a half-created store of ours: a crashed creation
+        // leaves only gbucket=* dirs (+ markers), anything else (e.g. an
+        // unpartitioned upsertParquet table) would be silently destroyed
+        if (fs.exists(dst)) {
+          val foreign = fs.listStatus(dst).map(_.getPath.getName).filterNot(nm =>
+            nm.startsWith(s"$BucketCol=") || nm.startsWith("_") || nm.startsWith("."))
+          if (foreign.nonEmpty)
+            throw new IllegalArgumentException(
+              s"$path exists but is not a partition-scoped upsert store " +
+                s"(found: ${foreign.take(3).mkString(",")}); refusing to overwrite")
+        }
+        // an empty batch must not create a zero-file store — later reads
+        // of it would fail schema inference and wedge every merge
+        if (keyed.isEmpty) return
+        // creation: lay the whole batch out bucketed, then stamp the meta
+        // (meta-last so a crash mid-creation re-runs creation cleanly)
+        keyed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
+        writeMeta(fs, meta, n, keys)
+        return
+      }
+      // touched buckets: bounded by numBuckets, so the collect is small by
+      // construction (this is the semi-join that scopes the merge)
+      val touched = keyed.select(BucketCol).distinct()
+        .collect().map(_.getInt(0)).sorted
+      if (touched.isEmpty) return // empty batch: nothing to merge
+      val existing = spark.read.parquet(path)
+        .where(col(BucketCol).isin(touched.toIndexedSeq: _*)) // partition-pruned
+      lastWriteWins(Some(existing), keyed, keys, orderCol)
+        .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmpRoot.toString)
+      touched.foreach { b =>
+        val fresh = new Path(tmpRoot, s"$BucketCol=$b")
+        // every touched bucket holds at least the batch's own winners
+        if (!fs.exists(fresh))
+          throw new IOException(s"merge output missing for bucket $b at $fresh")
+        swapIn(fs, fresh, new Path(dst, s"$BucketCol=$b"),
+          new Path(dst, s"$AsidePrefix$BucketCol=$b"))
+      }
+      fs.delete(tmpRoot, true)
+    } finally keyed.unpersist(false)
   }
 
-  /** Store-level + bucket-level crash recovery for a partition-scoped
-    * store. Factored out of the merge so readers that gate behavior on
-    * store existence ([[recoverUpsertStore]]) run the SAME recovery the
-    * writer would, under the same fence. Caller must hold the writer
-    * lock. */
-  private def recoverPartitionedLocked(fs: org.apache.hadoop.fs.FileSystem,
-                                       path: String,
-                                       dst: org.apache.hadoop.fs.Path): Unit = {
-    // store level: a rebucket that crashed between its two renames
-    // leaves the whole store at _old and nothing at dst — restore it,
-    // or a merge would "create" a batch-only store and strand the real
-    // one (and a reader would see no store at all)
-    val storeOrphan = new org.apache.hadoop.fs.Path(path + "_old")
-    if (!fs.exists(dst) && fs.exists(storeOrphan) && !fs.rename(storeOrphan, dst))
-      throw new java.io.IOException(s"cannot restore $storeOrphan to $dst")
-    // dst present + _old present = a rebucket crashed after its final
-    // rename landed; the _old copy is stale — drop it, don't leak it
-    if (fs.exists(dst)) fs.delete(storeOrphan, true)
-    // bucket level: a crash mid-swap leaves a bucket at its aside name
-    // and nothing live — restore it; an aside WITH a live dir is a
-    // stale copy from a crash after the new data landed — drop it
-    if (fs.exists(dst)) fs.listStatus(dst).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith(AsidePrefix)) {
-        val live = new org.apache.hadoop.fs.Path(dst, name.stripPrefix(AsidePrefix))
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new java.io.IOException(s"cannot restore ${st.getPath} to $live")
-        } else fs.delete(st.getPath, true)
-      }
-    }
-    // meta-only level (AFTER aside restore, which may have just revived
-    // the last bucket): a delete that emptied every bucket re-absents
-    // the whole store, but a crash between its last bucket swap and
-    // that final dir delete strands the exact zero-data-file state the
-    // re-absent rule exists to prevent — meta present, no gbucket=
-    // partitions, every read/merge wedged on parquet schema inference.
-    // Finish the crashed delete's intent: the store becomes absent.
-    // Unreachable from any other protocol: creation stamps the meta
-    // LAST (buckets exist first), and merges never remove buckets.
+  /** Crash recovery for a partition-scoped store — the one recovery every
+    * fenced entry point runs before it reads, gates on or rewrites the
+    * store (merge, delete, rebucket, [[recoverUpsertStore]]), undoing
+    * whatever an interrupted [[swapIn]] left behind:
+    *
+    *   1. store level: a rebucket that crashed between its two renames
+    *      leaves the whole store at `<path>_old` and nothing at `path` —
+    *      restored ([[restoreWholeTableOrphan]]), or a merge would
+    *      "create" a batch-only store and strand the real one; with the
+    *      store present, `_old` is a stale copy and is dropped;
+    *   2. bucket level: a bucket at `.aside_gbucket=N` with nothing live
+    *      is restored; an aside WITH a live dir is a stale copy from a
+    *      crash after the new data landed and is dropped;
+    *   3. meta-only level (AFTER step 2, which may have just revived the
+    *      last bucket): a delete that emptied every bucket re-absents the
+    *      whole store, but a crash between its last bucket swap and that
+    *      final dir delete strands the exact zero-data-file state the
+    *      re-absent rule exists to prevent — meta present, no gbucket=
+    *      partitions, every read/merge wedged on parquet schema
+    *      inference. The crashed delete's intent is finished: the store
+    *      becomes absent. Unreachable from any other protocol: creation
+    *      stamps the meta LAST (buckets exist first), and merges never
+    *      remove buckets.
+    *
+    * Spark's file index hides dot-prefixed directories, so a reader that
+    * skipped step 2 would silently miss a stranded bucket. Caller must
+    * hold the writer lock. */
+  private def recoverPartitionedLocked(fs: FileSystem, path: String, dst: Path): Unit = {
+    restoreWholeTableOrphan(fs, path, dst)
     if (fs.exists(dst)) {
+      fs.delete(new Path(path + "_old"), true)
+      fs.listStatus(dst).foreach { st =>
+        val name = st.getPath.getName
+        if (name.startsWith(AsidePrefix)) {
+          val live = new Path(dst, name.stripPrefix(AsidePrefix))
+          if (!fs.exists(live)) {
+            if (!fs.rename(st.getPath, live))
+              throw new IOException(s"cannot restore ${st.getPath} to $live")
+          } else fs.delete(st.getPath, true)
+        }
+      }
       val entries = fs.listStatus(dst).map(_.getPath.getName)
       if (entries.contains(MetaFile) &&
           !entries.exists(_.startsWith(s"$BucketCol=")))
@@ -496,107 +570,16 @@ object Sinks {
     * (silently skipping whatever the store was guarding — for the
     * incremental curation sink, one replayed batch's cross-batch
     * suppression). */
-  def recoverUpsertStore(spark: SparkSession, path: String): Boolean = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, path) {
-      recoverPartitionedLocked(fs, path, dst)
-    }
-    fs.exists(new org.apache.hadoop.fs.Path(dst, MetaFile))
-  }
+  def recoverUpsertStore(spark: SparkSession, path: String): Boolean =
+    withStoreFences(spark, Seq(path))(recoverUpsertStoreLocked(spark, path))
 
   /** [[recoverUpsertStore]] for callers already holding this store's
     * fence (via [[withStoreFences]]) — same recovery + committed-store
     * check, no re-acquisition. */
   private[graft] def recoverUpsertStoreLocked(spark: SparkSession, path: String): Boolean = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (dst, fs) = pathAndFs(spark, path)
     recoverPartitionedLocked(fs, path, dst)
-    fs.exists(new org.apache.hadoop.fs.Path(dst, MetaFile))
-  }
-
-  private def mergePartitionedLocked(spark: SparkSession, batch: DataFrame, path: String,
-                                     keys: Seq[String], orderCol: Option[String],
-                                     numBuckets: Int,
-                                     dst: org.apache.hadoop.fs.Path,
-                                     fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val tmpRoot = new org.apache.hadoop.fs.Path(path + "_tmp")
-    recoverPartitionedLocked(fs, path, dst)
-    fs.delete(tmpRoot, true)
-    val meta = new org.apache.hadoop.fs.Path(dst, MetaFile)
-    val n = if (fs.exists(meta)) {
-      val (storedN, storedKeys) = readMeta(fs, meta)
-      if (storedKeys.nonEmpty && storedKeys != keys)
-        throw new IllegalArgumentException(
-          s"upsert store at $path was created with keys ${storedKeys.mkString(",")}; " +
-            s"merging with ${keys.mkString(",")} would mis-bucket rows")
-      storedN
-    } else numBuckets
-    // the batch plan is consumed twice below (touched-bucket scoping,
-    // then the merge/creation write) and sink batches are often the
-    // tail of an expensive pipeline (the curation sink's is an LSH
-    // probe chain) — pin it so the second consumer reads the cache
-    // instead of recomputing the whole chain. MEMORY_AND_DISK default:
-    // batches are micro-batch sized by the sink contract, and a large
-    // one degrades to a disk spill, not an OOM.
-    val keyed = batch.withColumn(BucketCol,
-      pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int")).persist()
-    try {
-    if (!fs.exists(meta)) {
-      // creation overwrites dst, so it must never run over a directory
-      // that is NOT a half-created store of ours: a crashed creation
-      // leaves only gbucket=* dirs (+ markers), anything else (e.g. an
-      // unpartitioned upsertParquet table) would be silently destroyed
-      if (fs.exists(dst)) {
-        val foreign = fs.listStatus(dst).map(_.getPath.getName).filterNot(nm =>
-          nm.startsWith(s"$BucketCol=") || nm.startsWith("_") || nm.startsWith("."))
-        if (foreign.nonEmpty)
-          throw new IllegalArgumentException(
-            s"$path exists but is not a partition-scoped upsert store " +
-              s"(found: ${foreign.take(3).mkString(",")}); refusing to overwrite")
-      }
-      // an empty batch must not create a zero-file store — later reads
-      // of it would fail schema inference and wedge every merge
-      if (keyed.isEmpty) return
-      // creation: lay the whole batch out bucketed, then stamp the meta
-      // (meta-last so a crash mid-creation re-runs creation cleanly)
-      keyed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
-      writeMeta(fs, meta, n, keys)
-      return
-    }
-    // touched buckets: bounded by numBuckets, so the collect is small by
-    // construction (this is the semi-join that scopes the merge)
-    val touched = keyed.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return // empty batch: nothing to merge
-    val existing = spark.read.parquet(path)
-      .where(col(BucketCol).isin(touched.toIndexedSeq: _*)) // partition-pruned
-      .withColumn("_is_new", lit(0))
-    val all = existing.unionByName(keyed.withColumn("_is_new", lit(1)))
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(orderCol.map(c => col(c).desc).toSeq :+ col("_is_new").desc: _*)
-    val merged = all.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1).drop("_rn", "_is_new")
-    merged.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmpRoot.toString)
-    touched.foreach { b =>
-      val live = new org.apache.hadoop.fs.Path(dst, s"$BucketCol=$b")
-      val aside = new org.apache.hadoop.fs.Path(dst, s"$AsidePrefix$BucketCol=$b")
-      val fresh = new org.apache.hadoop.fs.Path(tmpRoot, s"$BucketCol=$b")
-      // every touched bucket holds at least the batch's own winners
-      if (!fs.exists(fresh))
-        throw new java.io.IOException(s"merge output missing for bucket $b at $fresh")
-      fs.delete(aside, true)
-      val had = fs.exists(live)
-      if (had && !fs.rename(live, aside))
-        throw new java.io.IOException(s"cannot move $live aside to $aside")
-      if (!fs.rename(fresh, live)) {
-        if (had) fs.rename(aside, live)
-        throw new java.io.IOException(s"cannot move $fresh into place at $live")
-      }
-      fs.delete(aside, true)
-    }
-    fs.delete(tmpRoot, true)
-    } finally keyed.unpersist(false)
+    fs.exists(new Path(dst, MetaFile))
   }
 
   /** Read the partition-scoped upsert store back with its user schema
@@ -609,17 +592,12 @@ object Sinks {
     * [[graft.streaming.Streaming.compactCuratedStore]]'s
     * retro-canonicalization. Scoped exactly like the merge: only the
     * buckets holding victim keys are read (partition-pruned) and
-    * rewritten, each swapped with the same aside protocol — a bucket
-    * the delete empties entirely is removed. Victim keys absent from
-    * the store are no-ops, so the operation is idempotent. Takes the
-    * writer fence; a delete and a merge cannot interleave. */
-  def deleteFromUpsertStore(spark: SparkSession, path: String, victims: DataFrame): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, path) {
-      deleteFromUpsertStoreLocked(spark, path, victims)
-    }
-  }
+    * rewritten, each committed with [[swapIn]] — a bucket the delete
+    * empties entirely is removed. Victim keys absent from the store are
+    * no-ops, so the operation is idempotent. Takes the writer fence; a
+    * delete and a merge cannot interleave. */
+  def deleteFromUpsertStore(spark: SparkSession, path: String, victims: DataFrame): Unit =
+    withStoreFences(spark, Seq(path))(deleteFromUpsertStoreLocked(spark, path, victims))
 
   /** [[deleteFromUpsertStore]] for callers already holding this store's
     * fence (via [[withStoreFences]]) — the compact pass holds its
@@ -627,50 +605,36 @@ object Sinks {
     * sequence excludes concurrent merges. */
   private[graft] def deleteFromUpsertStoreLocked(spark: SparkSession, path: String,
                                                  victims: DataFrame): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locally {
-      recoverPartitionedLocked(fs, path, dst)
-      val meta = new org.apache.hadoop.fs.Path(dst, MetaFile)
-      if (!fs.exists(meta))
-        throw new java.io.IOException(s"no upsert store meta at $path")
-      val (n, keys) = readMeta(fs, meta)
-      if (keys.isEmpty)
-        throw new java.io.IOException(s"store meta at $path lacks keys; cannot delete by key")
-      val missing = keys.filterNot(victims.columns.contains)
-      require(missing.isEmpty,
-        s"victims frame lacks the store's merge key(s): ${missing.mkString(",")}")
-      // same double-consumption shape as the merge (touched scoping +
-      // the anti-join), and compact's victims are LSH pair-join output
-      // — pin across both
-      val keyed = victims.select(keys.map(col): _*).distinct()
-        .withColumn(BucketCol,
-          pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int")).persist()
-      try {
+    val (dst, fs) = pathAndFs(spark, path)
+    recoverPartitionedLocked(fs, path, dst)
+    val meta = new Path(dst, MetaFile)
+    if (!fs.exists(meta))
+      throw new IOException(s"no upsert store meta at $path")
+    val (n, keys) = readMeta(fs, meta)
+    if (keys.isEmpty)
+      throw new IOException(s"store meta at $path lacks keys; cannot delete by key")
+    val missing = keys.filterNot(victims.columns.contains)
+    require(missing.isEmpty,
+      s"victims frame lacks the store's merge key(s): ${missing.mkString(",")}")
+    // same double-consumption shape as the merge (touched scoping +
+    // the anti-join), and compact's victims are LSH pair-join output
+    // — pin across both
+    val keyed = victims.select(keys.map(col): _*).distinct()
+      .withColumn(BucketCol,
+        pmod(xxhash64(keys.map(col): _*), lit(n.toLong)).cast("int")).persist()
+    try {
       val touched = keyed.select(BucketCol).distinct()
         .collect().map(_.getInt(0)).sorted
       if (touched.nonEmpty) {
-        val tmpRoot = new org.apache.hadoop.fs.Path(path + "_tmp")
+        val tmpRoot = new Path(path + "_tmp")
         fs.delete(tmpRoot, true)
         val kept = spark.read.parquet(path)
           .where(col(BucketCol).isin(touched.toIndexedSeq: _*)) // partition-pruned
           .join(keyed.drop(BucketCol), keys, "left_anti")
         kept.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmpRoot.toString)
         touched.foreach { b =>
-          val live = new org.apache.hadoop.fs.Path(dst, s"$BucketCol=$b")
-          val aside = new org.apache.hadoop.fs.Path(dst, s"$AsidePrefix$BucketCol=$b")
-          val fresh = new org.apache.hadoop.fs.Path(tmpRoot, s"$BucketCol=$b")
-          fs.delete(aside, true)
-          val had = fs.exists(live)
-          if (had && !fs.rename(live, aside))
-            throw new java.io.IOException(s"cannot move $live aside to $aside")
-          // unlike the merge, a delete may EMPTY a bucket (no fresh dir):
-          // the live dir then simply goes away
-          if (fs.exists(fresh) && !fs.rename(fresh, live)) {
-            if (had) fs.rename(aside, live)
-            throw new java.io.IOException(s"cannot move $fresh into place at $live")
-          }
-          fs.delete(aside, true)
+          swapIn(fs, new Path(tmpRoot, s"$BucketCol=$b"), new Path(dst, s"$BucketCol=$b"),
+            new Path(dst, s"$AsidePrefix$BucketCol=$b"))
         }
         fs.delete(tmpRoot, true)
         // a delete that empties EVERY bucket must not leave a meta-only
@@ -684,55 +648,40 @@ object Sinks {
           .exists(_.getPath.getName.startsWith(s"$BucketCol="))
         if (!anyBucket) fs.delete(dst, true)
       }
-      } finally keyed.unpersist(false)
-    }
+    } finally keyed.unpersist(false)
   }
 
   /** Maintenance: re-lay a partition-scoped store out with a new bucket
     * count. The count is fixed at creation (merges must hash with it),
     * so a store that has grown far past its sizing needs this offline
-    * step to restore merge granularity — one full read+write, then the
-    * same whole-directory swap as [[upsertParquet]] (crash before the
-    * final rename leaves the original store untouched). Takes the same
-    * writer fence as the merge, so a rebucket and a merge cannot
-    * interleave. */
+    * step to restore merge granularity — one full read+write, then one
+    * whole-directory [[swapIn]] (a crash before the final rename leaves
+    * the original store untouched). Takes the same writer fence as the
+    * merge, so a rebucket and a merge cannot interleave. */
   def rebucketUpsertStore(spark: SparkSession, path: String, newBuckets: Int): Unit = {
     require(newBuckets > 0, "newBuckets must be positive")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, path) {
-      rebucketLocked(spark, path, newBuckets, dst, fs)
-    }
+    withStoreFences(spark, Seq(path))(rebucketLocked(spark, path, newBuckets))
   }
 
-  private def rebucketLocked(spark: SparkSession, path: String, newBuckets: Int,
-                             dst: org.apache.hadoop.fs.Path,
-                             fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    // restore a store stranded at _old by a previously crashed rebucket
-    val prevOrphan = new org.apache.hadoop.fs.Path(path + "_old")
-    if (!fs.exists(dst) && fs.exists(prevOrphan) && !fs.rename(prevOrphan, dst))
-      throw new java.io.IOException(s"cannot restore $prevOrphan to $dst")
-    val meta = new org.apache.hadoop.fs.Path(dst, MetaFile)
+  private def rebucketLocked(spark: SparkSession, path: String, newBuckets: Int): Unit = {
+    val (dst, fs) = pathAndFs(spark, path)
+    // the full recovery, not just the store level: the read below goes
+    // through Spark's file index, which would skip a bucket stranded
+    // aside, and the swap would then drop it
+    recoverPartitionedLocked(fs, path, dst)
+    val meta = new Path(dst, MetaFile)
     if (!fs.exists(meta))
-      throw new java.io.IOException(s"no upsert store meta at $path")
+      throw new IOException(s"no upsert store meta at $path")
     val (_, keys) = readMeta(fs, meta)
     if (keys.isEmpty)
-      throw new java.io.IOException(s"store meta at $path lacks keys; cannot rebucket")
-    val tmp = new org.apache.hadoop.fs.Path(path + "_rebucket_tmp")
+      throw new IOException(s"store meta at $path lacks keys; cannot rebucket")
+    val tmp = new Path(path + "_rebucket_tmp")
     fs.delete(tmp, true)
     val rekeyed = readUpsertStore(spark, path).withColumn(BucketCol,
       pmod(xxhash64(keys.map(col): _*), lit(newBuckets.toLong)).cast("int"))
     rekeyed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmp.toString)
-    writeMeta(fs, new org.apache.hadoop.fs.Path(tmp, MetaFile), newBuckets, keys)
-    val orphan = new org.apache.hadoop.fs.Path(path + "_old")
-    fs.delete(orphan, true)
-    if (!fs.rename(dst, orphan))
-      throw new java.io.IOException(s"rebucket: cannot move $dst aside")
-    if (!fs.rename(tmp, dst)) {
-      fs.rename(orphan, dst)
-      throw new java.io.IOException(s"rebucket: cannot move $tmp into place")
-    }
-    fs.delete(orphan, true)
+    writeMeta(fs, new Path(tmp, MetaFile), newBuckets, keys)
+    swapIn(fs, tmp, dst, new Path(path + "_old"))
   }
 }
 

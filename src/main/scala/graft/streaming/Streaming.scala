@@ -234,9 +234,7 @@ object Streaming {
             .select(col("doc_b").as("doc_id")).distinct()
           val afterBatch = exactKept.join(batchLosers, Seq("doc_id"), "left_anti")
           // 3. probe the accumulated store (if it exists yet)
-          val dst = new org.apache.hadoop.fs.Path(storePath)
-          val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val survivors = if (fs.exists(dst)) {
+          val survivors = if (Sinks.recoverUpsertStore(s, storePath)) {
             val store = Sinks.readUpsertStore(s, storePath)
             val nearHits = graft.queries.TextQueries.lshProbe(
               afterBatch.where(col("h0").isNotNull).select(col("doc_id") +: sigCols: _*),
@@ -846,28 +844,16 @@ object Streaming {
         import sp.implicits._
         val batchRegs = batch.select(col(keyCol).cast("string")).as[String]
           .select(new graft.ext.HllAgg(b).toColumn).collect().head
-        val dst = new org.apache.hadoop.fs.Path(storePath)
-        val fs = dst.getFileSystem(sp.sparkContext.hadoopConfiguration)
         Sinks.withStoreFences(sp, Seq(storePath)) {
-          // a prior upsert that crashed between its swap renames leaves
-          // the store at <path>_old and nothing at dst — restore BEFORE
-          // the exists-gated read, or prev resolves to None and the
-          // merge below silently drops every previously merged key
-          // (the locked upsert would restore the orphan only to
-          // overwrite it with batch-only registers)
-          Sinks.restoreWholeTableOrphan(fs, storePath, dst)
-          val prev =
-            if (fs.exists(dst))
-              sp.read.parquet(storePath).select(col("regs")).as[Array[Long]]
-                .collect().headOption
-            else None
+          val prev = Sinks.readWholeTableLocked(sp, storePath)
+            .flatMap(_.select(col("regs")).as[Array[Long]].collect().headOption)
           prev.foreach(p => require(p.length == batchRegs.length,
             s"register width mismatch: store holds ${p.length}, sink built " +
               s"${batchRegs.length} (different b?) — refusing to truncate"))
           val merged = prev.fold(batchRegs)(p =>
             p.zip(batchRegs).map { case (a, b2) => math.max(a, b2) })
           Sinks.upsertWholeTableLocked(sp, Seq((1, merged)).toDF("k", "regs"),
-            storePath, Seq("k"), None, dst, fs)
+            storePath, Seq("k"), None)
         }
       }
 }

@@ -6,14 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Pipelines, Schemas}
 
 /** Golden end-to-end tests (SURVEY.md §5): run our transform pipelines on
-  * the reference's committed raw JSON and diff against staged CSVs — the
-  * de-facto correctness corpus (the reference ships no tests; its data IS
-  * the spec). The weather goldens read the reference tree in place and
-  * cancel where it is absent; the AQ golden runs over a vendored fixture.
+  * vendored raw JSON and diff against staged CSVs — the de-facto
+  * correctness corpus (the reference ships no tests; its data IS the
+  * spec). Both goldens read only files under src/test/resources.
   */
 class GoldenPipelineSpec extends SparkSpec {
-
-  private val refWeather = "/root/reference/ETL_Weather_API/data"
 
   private def rows(df: DataFrame, sortCols: String*): Seq[Row] =
     df.orderBy(sortCols.map(col): _*).collect().toSeq
@@ -37,24 +34,19 @@ class GoldenPipelineSpec extends SparkSpec {
     }
   }
 
-  // ---- weather: each committed raw file has a matching staged CSV ----
+  // ---- weather: a hand-checked raw file and its staged rows ----
 
-  private val weatherPairs = Seq(
-    "weather_20251211_100303.json" -> "weather_staged_20251211_100304.csv",
-    "weather_20251211_100602.json" -> "weather_staged_20251211_100603.csv",
-    "weather_20251211_100941.json" -> "weather_staged_20251211_100942.csv",
-    "weather_20251211_101400.json" -> "weather_staged_20251211_101401.csv")
-
-  private def readWeatherGolden(path: String): DataFrame =
-    spark.read.option("header", true).schema(Schemas.weatherStaged).csv(path)
-
-  weatherPairs.foreach { case (rawName, stagedName) =>
-    test(s"weather golden: $rawName -> $stagedName") {
-      assume(Files.exists(Paths.get(s"$refWeather/raw/$rawName")))
-      val got = rows(Pipelines.weatherStage(spark, s"$refWeather/raw/$rawName"), "time")
-      val want = rows(readWeatherGolden(s"$refWeather/staged/$stagedName"), "time")
-      assertRowsEqual(got, want, rawName)
-    }
+  // The expected CSV is computed by hand from the FIXTURES.md A1/A4
+  // semantics, not by this engine: right-closed tempCategory bins
+  // (0 -> very_cold, 10 -> cold, 20 -> mild, 30 -> warm, 30.5 -> hot),
+  // feels_like = t - rh/100 * 2, a null temperature leaving both derived
+  // columns null, and the all-null 06:00 hour dropped by na.drop("all").
+  test("weather golden: hand-checked fixture -> staged rows (bin edges, nulls, all-null hour)") {
+    val got = rows(Pipelines.weatherStage(spark,
+      "src/test/resources/weather_raw/weather_20251211_000000.json"), "time")
+    val want = rows(spark.read.option("header", true).schema(Schemas.weatherStaged)
+      .csv("src/test/resources/golden/weather_staged_20251211_000000.csv"), "time")
+    assertRowsEqual(got, want, "weather")
   }
 
   // ---- air quality: all committed raw files -> the committed staged CSV ----

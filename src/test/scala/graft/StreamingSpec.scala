@@ -1112,26 +1112,40 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("partitioned upsert recovers a bucket stranded aside by a crashed swap") {
+    // every writer of the partition-scoped store restores the bucket
+    // before it reads: Spark's file index hides the dot-prefixed aside
+    // dir, so a writer that skipped the restore would drop its rows
     val schema = StructType(Seq(StructField("city", StringType),
       StructField("value", DoubleType), StructField("seq", LongType)))
-    val target = tmpDir("upsert_part_crash").resolve("t").toString
-    val seed = spark.createDataFrame(java.util.List.of(
-      (0 until 32).map(i =>
-        org.apache.spark.sql.Row(s"k$i", i.toDouble, 1L)): _*), schema)
-    Sinks.upsertParquetPartitioned(spark, seed, target, Seq("city"), Some("seq"), numBuckets = 8)
-    val root = new org.apache.hadoop.fs.Path(target)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a crash between the two swap renames on one bucket: live
-    // dir moved aside, replacement never landed
-    val live = fs.listStatus(root).map(_.getPath)
-      .find(_.getName.startsWith("gbucket=")).get
-    val aside = new org.apache.hadoop.fs.Path(root, ".aside_" + live.getName)
-    assert(fs.rename(live, aside))
-    val b2 = spark.createDataFrame(java.util.List.of(
-      org.apache.spark.sql.Row("k_new", 100.0, 2L)), schema)
-    Sinks.upsertParquetPartitioned(spark, b2, target, Seq("city"), Some("seq"))
-    // the stranded bucket was restored before the merge — nothing lost
-    assert(Sinks.readUpsertStore(spark, target).count() == 33)
+    def frame(rows: org.apache.spark.sql.Row*) =
+      spark.createDataFrame(java.util.List.of(rows: _*), schema)
+    val seeded = (0 until 32).map(i => s"k$i").toSet
+    val writers: Seq[(String, String => Unit, Set[String])] = Seq(
+      ("merge", t => Sinks.upsertParquetPartitioned(spark,
+        frame(org.apache.spark.sql.Row("k_new", 100.0, 2L)), t, Seq("city"), Some("seq")),
+        seeded + "k_new"),
+      ("delete", t => Sinks.deleteFromUpsertStore(spark, t,
+        frame(org.apache.spark.sql.Row("k0", 0.0, 0L))), seeded - "k0"),
+      ("rebucket", t => Sinks.rebucketUpsertStore(spark, t, 4), seeded))
+    writers.foreach { case (name, write, want) =>
+      val target = tmpDir(s"upsert_part_crash_$name").resolve("t").toString
+      Sinks.upsertParquetPartitioned(spark,
+        frame(seeded.toSeq.sorted.map(c => org.apache.spark.sql.Row(c, 1.0, 1L)): _*),
+        target, Seq("city"), Some("seq"), numBuckets = 8)
+      val root = new org.apache.hadoop.fs.Path(target)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // simulate a crash between the two swap renames on one bucket: live
+      // dir moved aside, replacement never landed
+      val live = fs.listStatus(root).map(_.getPath)
+        .find(_.getName.startsWith("gbucket=")).get
+      assert(fs.rename(live, new org.apache.hadoop.fs.Path(root, ".aside_" + live.getName)))
+      write(target)
+      val got = Sinks.readUpsertStore(spark, target).select("city")
+        .collect().map(_.getString(0)).toSet
+      assert(got == want, s"$name: lost ${want -- got}, gained ${got -- want}")
+      assert(!fs.listStatus(root).exists(_.getPath.getName.startsWith(".aside_")),
+        s"$name left an aside copy behind")
+    }
   }
 
   test("streaming upsert sink over the partitioned store: last write wins per key") {
