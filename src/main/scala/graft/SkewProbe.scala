@@ -68,10 +68,7 @@ object SkewProbe {
         (xxhash64(col("id")) % 100000000L).as("dhash")))
       .repartition(32).persist()
     hashes.count()
-    val bands = hashes.select(col("doc_id"), col("dhash"),
-        explode(array((0 until 4).map(j => struct(lit(j).as("band"),
-          shiftright(col("dhash"), 16 * j).bitwiseAND(lit(0xFFFFL)).as("bkey"))): _*)).as("bk"))
-      .select(col("doc_id"), col("dhash"), col("bk.band"), col("bk.bkey"))
+    val bands = graft.queries.MultimodalQueries.hammingBands(hashes)
     // CONTROL: the pre-r18 shape — count over a window on the hot key.
     // This code exists ONLY here, as the probe's baseline.
     measure(spark, "cap_window_CONTROL") {
@@ -84,10 +81,7 @@ object SkewProbe {
     // groupBy occupancy count whose <=cap survivor list broadcasts back
     // onto the band rows, hot-bucket rows dropped map-side.
     measure(spark, "cap_groupby_ENGINE") {
-      val keep = bands.groupBy(col("band"), col("bkey"))
-        .agg(count(lit(1)).as("_n")).where(col("_n") <= 8)
-        .select(col("band"), col("bkey"))
-      bands.join(broadcast(keep), Seq("band", "bkey"))
+      graft.queries.MultimodalQueries.capBands(bands, Nil, cap = 8)
     }
     // ENGINE (end-to-end): bandedHashPairs' full chain — cap filter +
     // pair join + Hamming tail (the benign distinct-hash residue; the

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.engine.{CacheScope, Tables}
@@ -230,26 +230,6 @@ object MultimodalQueries {
     }.toDF()
   }
 
-  /** Max (kind, band, bkey) bucket occupancy over the mixed corpus's
-    * fingerprints — q123's registration-time precondition: the capped
-    * streaming gate hashes against the CAPLESS one-shot oracle, which
-    * is only sound while no bucket exceeds the cap (q111's span-guard
-    * discipline: fail loudly at the source on a testdata change, not
-    * with a hash break far from its cause). One narrow decode pass +
-    * a partial-aggregable count — the same skew-safe occupancy shape
-    * the cap itself uses. */
-  private[graft] def maxMediaBandOccupancy(s: SparkSession, d: String): Long = {
-    val fp = Multimodal.mediaHashes(s,
-        mixedFpCorpus(s, Tables.documents(s, d))).toDF()
-      .where(col("fp").isNotNull)
-    fp.select(col("kind"),
-        explode(array((0 until 4).map(j => struct(lit(j).as("band"),
-          shiftright(col("fp"), 16 * j).bitwiseAND(lit(0xFFFFL)).as("bkey"))): _*)).as("bk"))
-      .groupBy(col("kind"), col("bk.band"), col("bk.bkey"))
-      .agg(count(lit(1)).as("n"))
-      .agg(max(col("n"))).head.getLong(0)
-  }
-
   /** Perceptual hashes of the decodable slice of the BMP corpus —
     * q84/q104's shared input (real decode path only; non-BMPs yield
     * null and sit out). */
@@ -266,14 +246,27 @@ object MultimodalQueries {
       .toDF().where(col("afp").isNotNull)
       .select(col("doc_id"), col("afp").as("dhash"))
 
-  /** The four 16-bit band keys of every hash, one row per (doc, band) —
-    * the shared head of the pair join, the occupancy count, and the
-    * cap-drop accounting. */
-  private def bandKeys(hashes: DataFrame): DataFrame =
-    hashes.select(col("doc_id"), col("dhash"),
-        explode(array((0 until 4).map(j => struct(lit(j).as("band"),
-          shiftright(col("dhash"), 16 * j).bitwiseAND(lit(0xFFFFL)).as("bkey"))): _*)).as("bk"))
-      .select(col("doc_id"), col("dhash"), col("bk.band"), col("bk.bkey"))
+  // ---- the Hamming near-dup kernel ------------------------------------
+  // The one statement of the 64-bit banded join that every perceptual-
+  // hash path runs: the batch pair operators (q84/q104/q112/q113/q116/
+  // q117/q119/q121), the streaming media sink and its compact
+  // (q122/q123), and q123's occupancy guard. Four 16-bit bands of the
+  // hash key a candidate equi-join, a per-bucket occupancy cap bounds
+  // its one quadratic unit, and the exact Hamming distance over the full
+  // hash verifies. `by` lists extra join-key columns: Nil for a
+  // single-modality chain, Seq("kind") for the media store, whose
+  // fingerprints of different kinds live in different spaces and must
+  // never compare.
+
+  /** The four 16-bit band keys of every hash, one row per (doc, band):
+    * (doc_id, by.., hash, band, bkey). */
+  private[graft] def hammingBands(fp: DataFrame, by: Seq[String] = Nil,
+                                  hash: String = "dhash"): DataFrame = {
+    val carried = (col("doc_id") +: by.map(col)) :+ col(hash)
+    fp.select(carried :+ explode(array((0 until 4).map(j => struct(lit(j).as("band"),
+          shiftright(col(hash), 16 * j).bitwiseAND(lit(0xFFFFL)).as("bkey"))): _*)).as("bk"): _*)
+      .select(carried ++ Seq(col("bk.band"), col("bk.bkey")): _*)
+  }
 
   /** Bucket occupancy as a PARTIAL-AGGREGABLE count — the skew-safe
     * form of the cap stage (r17 verdict #1). The bucket key is 16 bits,
@@ -283,112 +276,215 @@ object MultimodalQueries {
     * skew splitting cannot help a window. groupBy's map-side combine
     * collapses the hot key to one partial row per input partition
     * BEFORE the shuffle, so the straggler never forms — and the output
-    * is bounded at 4·2^16 = 262,144 rows regardless of corpus size,
-    * which is why the join-back below can always broadcast. */
-  private def bandOccupancy(hashes: DataFrame): DataFrame =
-    bandKeys(hashes).groupBy(col("band"), col("bkey"))
+    * is bounded at (by values)·4·2^16 rows regardless of corpus size,
+    * which is why the cut below can always broadcast. */
+  private def occupancy(bands: DataFrame, by: Seq[String]): DataFrame =
+    bands.groupBy((by ++ Seq("band", "bkey")).map(col): _*)
       .agg(count(lit(1)).as("_n"))
 
-  /** The Hamming-banded pair join over ANY (doc_id, dhash) 64-bit
-    * perceptual-hash frame — stated once for the image chain (q84 +
-    * the q104 cluster composition) and the audio chain (q112/q113):
-    * four 16-bit bands of the 64-bit hash key the candidate join, a
-    * per-bucket occupancy cap (q62's pattern) bounds the one quadratic
-    * unit (templated corpora collapse to few distinct perceptual
-    * hashes, so hot buckets are the NORM here, not a tail case), and
-    * the exact Hamming distance over the full hash filters candidates.
-    * Never all-pairs: pair volume is bounded at C(cap,2)·buckets by
-    * construction. `cap` is the production knob: size it to the
-    * expected duplicate MULTIPLICITY (a corpus where every item has m
-    * near-copies needs cap >~ m or the very buckets holding the
-    * duplicates exceed occupancy and drop — ScaleSoak's replica storms
-    * measure exactly that collapse at cap 8 and the bounded recovery
-    * at a multiplicity-sized cap; q121 gates the cap-256 point under
-    * the oracle).
-    *
-    * Cap mechanics (r17 verdict #1): the surviving-bucket list — a
-    * [[bandOccupancy]] aggregate filtered to `_n <= cap`, bounded at
-    * 262,144 rows by the 16-bit keyspace — BROADCASTS back onto the
-    * band rows, so hot-bucket rows are dropped map-side without ever
-    * shuffling, and every bucket reaching the pair join holds <= cap
-    * rows, making the join skew-free by construction. */
-  private[graft] def bandedHashPairs(hashes: DataFrame, cap: Int = 8,
-                                     scope: CacheScope = CacheScope.untracked): DataFrame = {
+  /** The cap's one precondition, shared by every entry point that takes
+    * the knob: below 2 no bucket can hold a pair, so a cap of 1 or 0
+    * would silently turn the near-dup pass off. */
+  private[graft] def requireCap(cap: Int): Unit =
     require(cap >= 2, s"a pair needs bucket occupancy >= 2, got cap $cap")
-    // the hash frame (a decode pipeline for every caller) now feeds
-    // three subtrees — occupancy, a-side, b-side — so cache it unless
-    // the caller already did. Block ownership is the scope's: the
-    // registry entries run under the Bench/Verify clearCache contract
-    // (the untracked default); a long-lived-session embedder passes a
-    // tracking CacheScope and close() releases the blocks (r18 verdict
-    // #5 — the helper itself returns lazily and can never unpersist).
-    val h = if (hashes.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      scope.persist(hashes) else hashes
-    pairsUnderCap(h, bandOccupancy(h), cap)
+
+  /** The occupancy cap: the surviving-bucket list — an [[occupancy]]
+    * aggregate filtered to `_n <= cap` — BROADCASTS back onto the band
+    * rows, so hot-bucket rows drop map-side without ever shuffling and
+    * every bucket reaching the verify join holds <= cap rows (skew-free
+    * by construction). `occ` passes a precomputed occupancy frame so
+    * one pass can also feed the cap-drop disclosure. */
+  private[graft] def capBands(bands: DataFrame, by: Seq[String], cap: Int,
+                              occ: Option[DataFrame] = None): DataFrame = {
+    requireCap(cap)
+    val key = by ++ Seq("band", "bkey")
+    val keep = occ.getOrElse(occupancy(bands, by)).where(col("_n") <= cap)
+      .select(key.map(col): _*)
+    bands.join(broadcast(keep), key)
   }
 
-  /** The pair-join tail of [[bandedHashPairs]] over a precomputed
-    * occupancy frame — shared with [[bandedPairsWithDropStats]] so one
-    * occupancy pass can feed both the cap and the disclosure. */
-  private def pairsUnderCap(h: DataFrame, occ: DataFrame, cap: Int): DataFrame = {
-    val bands = bandKeys(h)
-    val keep = occ.where(col("_n") <= cap)
-      .select(col("band"), col("bkey"))
-    val capped = bands.join(broadcast(keep), Seq("band", "bkey"))
-    val a = capped.select(col("doc_id").as("doc_a"), col("dhash").as("ha"),
-      col("band"), col("bkey"))
-    val b = capped.select(col("doc_id").as("doc_b"), col("dhash").as("hb"),
-      col("band"), col("bkey"))
-    a.join(b, Seq("band", "bkey"))
-      .where(col("doc_a") < col("doc_b"))
+  /** One side of the verify join: band rows as (doc_<s>, by.., h<s>,
+    * band, bkey). */
+  private def side(bands: DataFrame, by: Seq[String], hash: String, s: String): DataFrame =
+    bands.select((col("doc_id").as(s"doc_$s") +: by.map(col)) ++
+      Seq(col(hash).as(s"h$s"), col("band"), col("bkey")): _*)
+
+  /** The one banded verify join: a-side rows meet b-side rows on
+    * (by.., band, bkey), `order` orients each candidate, and the exact
+    * Hamming distance over the full hash keeps those within 4, as
+    * (doc_a, doc_b, hamming) — one row per shared band. */
+  private def verifyJoin(a: DataFrame, b: DataFrame, by: Seq[String],
+                         order: Column): DataFrame =
+    a.join(b, by ++ Seq("band", "bkey")).where(order)
       .select(col("doc_a"), col("doc_b"),
         bit_count(col("ha").bitwiseXOR(col("hb"))).cast("int").as("hamming"))
-      .distinct()
       .where(col("hamming") <= 4)
+
+  /** The pair form over a (doc_id, dhash) frame: distinct (doc_a < doc_b,
+    * hamming) within Hamming 4 through >= 1 shared capped band. */
+  private def pairsUnderCap(h: DataFrame, cap: Int, occ: Option[DataFrame]): DataFrame = {
+    val capped = capBands(hammingBands(h), Nil, cap, occ)
+    verifyJoin(side(capped, Nil, "dhash", "a"), side(capped, Nil, "dhash", "b"),
+      Nil, col("doc_a") < col("doc_b")).distinct()
   }
 
-  /** [[bandedHashPairs]] and [[capDropStats]] from ONE occupancy pass
-    * (r22, guide §5): the manifest queries (q116/q117/q119) consume
-    * both over the same hash frame, and each helper re-ran the
-    * scan+groupBy occupancy aggregate for its own side of the cap. The
-    * occupancy frame is bounded at 262,144 rows by the 16-bit keyspace,
-    * so pinning it costs nothing; the keep cut, the hot cut, and the
-    * disclosure doc count all read the one cached aggregate. Returns
-    * (pairs, 1-row drop stats). */
+  /** The loser form over (doc_id, by.., fp) frames: docs of `fp` with a
+    * STRICTLY-lower-id witness in any of `witnesses` within Hamming 4
+    * through >= 1 shared band. Each frame is capped on its own (its own
+    * occupancy counts) when `cap` is set; None runs capless. The
+    * streaming media sink passes Seq(batch, store) — within-batch and
+    * cross-batch suppression in one join — and its compact passes
+    * Seq(store). The strict `<` keeps a crash-replayed batch from being
+    * suppressed by its own earlier attempt's store rows, and makes the
+    * loser set a function of the lower-id SET (the order invariance the
+    * q122 gate states). Per `by` group and at one cap, the loser set of
+    * `hammingLosers(f, Seq(f), ..)` is the higher-id side of
+    * [[bandedHashPairs]] over that group (StreamingSpec pins it). */
+  private[graft] def hammingLosers(fp: DataFrame, witnesses: Seq[DataFrame],
+                                   by: Seq[String], cap: Option[Int]): DataFrame = {
+    val cut = (f: DataFrame) => {
+      val bands = hammingBands(f, by, "fp")
+      cap.fold(bands)(c => capBands(bands, by, c))
+    }
+    verifyJoin(side(cut(fp), by, "fp", "a"),
+        witnesses.map(w => side(cut(w), by, "fp", "b")).reduce(_ unionByName _),
+        by, col("doc_b") < col("doc_a"))
+      .select(col("doc_a").as("doc_id")).distinct()
+  }
+
+  /** Max (kind, band, bkey) bucket occupancy over a (doc_id, kind, fp)
+    * fingerprint frame — q123's precondition: the capped streaming gate
+    * hashes against the CAPLESS one-shot oracle, which is only sound
+    * while no bucket exceeds the cap (q111's span-guard discipline:
+    * fail loudly at the source on a testdata change, not with a hash
+    * break far from its cause). 0 when no row carries a fingerprint. */
+  private[graft] def maxMediaBandOccupancy(fp: DataFrame): Long =
+    occupancy(hammingBands(fp.where(col("fp").isNotNull), Seq("kind"), "fp"), Seq("kind"))
+      .agg(coalesce(max(col("_n")), lit(0L))).head.getLong(0)
+
+  /** Cache the hash frame unless the caller already did: it feeds the
+    * occupancy and both join sides. Block ownership is the scope's: the
+    * registry entries run under the Bench/Verify clearCache contract
+    * (the untracked default); a long-lived-session embedder passes a
+    * tracking CacheScope and close() releases the blocks (r18 verdict
+    * #5 — the helpers return lazily and can never unpersist). */
+  private def pinned(hashes: DataFrame, scope: CacheScope): DataFrame =
+    if (hashes.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      scope.persist(hashes) else hashes
+
+  /** The Hamming-banded pair join over ANY (doc_id, dhash) 64-bit
+    * perceptual-hash frame — the image chain (q84, q104, q116, q121)
+    * and the audio chain (q112, q113, q117) alike. Never all-pairs:
+    * pair volume is bounded at C(cap,2)·buckets by construction. `cap`
+    * is the production knob: size it to the expected duplicate
+    * MULTIPLICITY (a corpus where every item has m near-copies needs
+    * cap >~ m or the very buckets holding the duplicates exceed
+    * occupancy and drop — ScaleSoak's replica storms measure exactly
+    * that collapse at cap 8 and the bounded recovery at a
+    * multiplicity-sized cap; q121 gates the cap-256 point under the
+    * oracle). */
+  private[graft] def bandedHashPairs(hashes: DataFrame, cap: Int = 8,
+                                     scope: CacheScope = CacheScope.untracked): DataFrame = {
+    requireCap(cap)
+    pairsUnderCap(pinned(hashes, scope), cap, None)
+  }
+
+  /** [[bandedHashPairs]] plus its cap-drop disclosure from ONE occupancy
+    * pass (r22, guide §5) — the manifest queries (q116/q117/q119) need
+    * both over the same hash frame. The occupancy frame is bounded at
+    * 262,144 rows by the 16-bit keyspace, so pinning it costs nothing;
+    * the keep cut, the hot cut and the doc count all read it.
+    *
+    * The disclosure (r17 verdict #3) is one row: how many band buckets
+    * exceeded `cap` (and were therefore excluded from pair formation)
+    * and how many distinct docs sat in at least one such bucket (docs
+    * whose 'singleton' claim the cap weakens). A manifest that silently
+    * overstates uniqueness is the silent-cap failure mode; these
+    * columns make the knob's recall contract visible in the artifact.
+    * The hot-bucket list broadcasts, so the doc count never shuffles
+    * the band rows. Returns (pairs, 1-row drop stats). */
   private[graft] def bandedPairsWithDropStats(hashes: DataFrame, cap: Int = 8,
       scope: CacheScope = CacheScope.untracked): (DataFrame, DataFrame) = {
-    require(cap >= 2, s"a pair needs bucket occupancy >= 2, got cap $cap")
-    val h = if (hashes.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      scope.persist(hashes) else hashes
-    val occ = scope.persist(bandOccupancy(h))
+    requireCap(cap)
+    val h = pinned(hashes, scope)
+    val occ = scope.persist(occupancy(hammingBands(h), Nil))
     val hot = occ.where(col("_n") > cap).select(col("band"), col("bkey"))
     val nHot = hot.agg(count(lit(1)).as("n_dropped_buckets"))
-    val nDocs = bandKeys(h).join(broadcast(hot), Seq("band", "bkey"))
-      .agg(countDistinct(col("doc_id")).as("n_docs_in_dropped"))
-    (pairsUnderCap(h, occ, cap), nHot.crossJoin(nDocs))
-  }
-
-  /** Cap-drop disclosure for the dedup manifests (r17 verdict #3): one
-    * row of accounting from the SAME occupancy counts the cap derives —
-    * how many band buckets exceeded `cap` (and were therefore excluded
-    * from pair formation) and how many distinct docs sat in at least
-    * one such bucket (docs whose 'singleton' claim the cap weakens). A
-    * manifest that silently overstates uniqueness is the silent-cap
-    * failure mode; these columns make the knob's recall contract
-    * visible in the artifact itself. The hot-bucket list broadcasts
-    * (bounded at 262,144 rows), so the doc count never shuffles the
-    * band rows. */
-  private[graft] def capDropStats(hashes: DataFrame, cap: Int = 8): DataFrame = {
-    val hot = bandOccupancy(hashes).where(col("_n") > cap)
-      .select(col("band"), col("bkey"))
-    val nHot = hot.agg(count(lit(1)).as("n_dropped_buckets"))
-    val nDocs = bandKeys(hashes).join(broadcast(hot), Seq("band", "bkey"))
+    val nDocs = hammingBands(h).join(broadcast(hot), Seq("band", "bkey"))
       .agg(countDistinct(col("doc_id")).as("n_docs_in_dropped"))
     // 1 row x 1 row: the established broadcast-scalar-pack idiom (a
     // constant-key hash join would not survive constant folding — the
     // optimizer rewrites it to this same nested loop, so the plan pin
     // recognizes the bounded 1x1 packs explicitly instead)
-    nHot.crossJoin(nDocs)
+    (pairsUnderCap(h, cap, Some(occ)), nHot.crossJoin(nDocs))
+  }
+
+  /** Connected components over a (doc_a, doc_b) pair frame as (doc_id,
+    * cluster_id) — the min-label closure every cluster and manifest
+    * query runs, so the cluster id IS the minimum member doc_id. */
+  private def closure(pairs: DataFrame): DataFrame =
+    graft.ext.Graph.connectedComponents(pairs, "doc_a", "doc_b")
+      .select(col("node").as("doc_id"), col("component").as("cluster_id"))
+
+  /** q104/q113's per-cluster accounting over a (doc_id, dhash) frame:
+    * banded pairs -> closure -> member count and distinct hashes per
+    * cluster, then observed pair count and max pair distance per
+    * cluster (over OBSERVED edges only — all-pairs distances are what
+    * the banding exists to avoid). */
+  private def dupClusters(hashFrame: DataFrame): DataFrame = {
+    val hashes = hashFrame.persist()
+    val pairs = bandedHashPairs(hashes).persist()
+    val comps = closure(pairs)
+    val mem = comps.join(hashes, Seq("doc_id"))
+      .groupBy(col("cluster_id")).agg(
+        count(lit(1)).as("n_members"),
+        countDistinct(col("dhash")).as("n_distinct_hashes"))
+    val edges = pairs
+      .join(comps.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"))
+      .groupBy(col("cluster_id")).agg(
+        count(lit(1)).as("n_pairs"),
+        max(col("hamming")).as("max_hamming"))
+    mem.join(edges, Seq("cluster_id")).orderBy(col("cluster_id"))
+  }
+
+  /** q116/q117's single-modality manifest over a (doc_id, dhash) frame:
+    * one occupancy pass feeds the cap AND the disclosure (r22). */
+  private def curationManifest(hashFrame: DataFrame): DataFrame = {
+    val hashes = hashFrame.persist()
+    val (pairs, drops) = bandedPairsWithDropStats(hashes)
+    keptManifest(hashes, pairs, drops, by = Nil)
+  }
+
+  /** The kept manifest of q116/q117/q119: closure -> per-cluster
+    * representative by ONE partial-aggregable max over (popcount,
+    * -doc_id) structs (q67's device: a giant cluster streams through
+    * map-side combines instead of sorting in one window reducer) ->
+    * every unclustered doc as a 'singleton' plus one 'cluster_rep' per
+    * cluster with its absorbed-duplicate count -> the cap-drop
+    * disclosure attached. `by` are columns that are constant within a
+    * cluster (q119's `kind`: pairs never cross kinds) and key the
+    * disclosure rows; Nil attaches the single disclosure row to all. */
+  private def keptManifest(hashes: DataFrame, pairs: DataFrame, drops: DataFrame,
+                           by: Seq[String]): DataFrame = {
+    val comps = closure(pairs)
+    val best = max(struct(bit_count(col("dhash")).as("detail"),
+      (-col("doc_id")).as("negid")))
+    val reps = comps.join(hashes, Seq("doc_id"))
+      .groupBy(col("cluster_id")).agg(
+        count(lit(1)).as("n_members"), best.as("best") +: by.map(c => min(col(c)).as(c)): _*)
+      .select(((-col("best.negid")).cast("long").as("doc_id") +: by.map(col)) ++ Seq(
+        lit("cluster_rep").as("provenance"), col("cluster_id"),
+        (col("n_members") - 1).as("n_absorbed"),
+        col("best.detail").cast("int").as("detail_bits")): _*)
+    val singles = hashes.join(comps, Seq("doc_id"), "left_anti")
+      .select((col("doc_id") +: by.map(col)) ++ Seq(lit("singleton").as("provenance"),
+        lit(null).cast("long").as("cluster_id"),
+        lit(0L).as("n_absorbed"),
+        bit_count(col("dhash")).cast("int").as("detail_bits")): _*)
+    val kept = singles.unionByName(reps)
+    (if (by.isEmpty) kept.crossJoin(broadcast(drops)) // 1-row disclosure pack
+     else kept.join(broadcast(drops), by))             // one disclosure row per key
+      .orderBy(col("doc_id"))
   }
 
   /** The banding / occupancy-cap / Hamming-filter tail of
@@ -418,10 +514,10 @@ object MultimodalQueries {
        |    AND a.doc_id < c.doc_id
        |  WHERE bit_count(xor(a.dhash, c.dhash)) <= 4)""".stripMargin
 
-  /** Mirror of [[capDropStats]] as oracle CTEs over an existing
-    * `<p>bk` band-key CTE (so it composes with [[sqlBandPairTail]]'s
-    * claims): the over-cap bucket list and the one-row disclosure pack.
-    * Claims `<p>hot`, `<p>drop`. */
+  /** Mirror of [[bandedPairsWithDropStats]]' disclosure as oracle CTEs
+    * over an existing `<p>bk` band-key CTE (so it composes with
+    * [[sqlBandPairTail]]'s claims): the over-cap bucket list and the
+    * one-row disclosure pack. Claims `<p>hot`, `<p>drop`. */
   private def sqlCapDropCte(p: String, cap: Int = 8): String =
     s"""${p}hot AS (SELECT band, bkey FROM ${p}bk GROUP BY 1, 2 HAVING count(*) > $cap),
        |${p}drop AS (
@@ -429,14 +525,74 @@ object MultimodalQueries {
        |         (SELECT count(DISTINCT k.doc_id) FROM ${p}bk k
        |          JOIN ${p}hot t ON k.band = t.band AND k.bkey = t.bkey) AS n_docs_in_dropped)""".stripMargin
 
-  /** Mirror of [[bandedHashPairs]] over the image hashes as oracle
-    * CTEs (claims h + [[sqlBandPairTail]]'s `i` instance: ibk,
-    * icapped, ipairs; needs [[sqlBmpBase]]'s `b` in scope). The dHash
-    * restates bit-by-bit from the text hex — only informative bits
-    * (cells whose floor-mapped source positions differ, per
-    * constructed width: w=2 one transition per row, w=4 three) are
-    * emitted; every other bit compares a cell to itself and is 0 by
-    * construction, in the Spark kernel and here alike. */
+  /** Mirror of [[closure]] as oracle CTEs over a (doc_a, doc_b) pair
+    * relation: a recursive reachability walk whose min label is the
+    * cluster id (explicit DISTINCT subselects: under WITH RECURSIVE,
+    * DuckDB gives non-self-referencing set-op CTEs recursive-anchor
+    * semantics and stops deduplicating them). Claims `<p>edges`,
+    * `<p>reach`, `<p>cl`. */
+  private def sqlClosureCtes(pairs: String, p: String): String =
+    s"""${p}edges AS (SELECT DISTINCT a, b FROM (
+       |  SELECT doc_a AS a, doc_b AS b FROM $pairs
+       |  UNION ALL
+       |  SELECT doc_b AS a, doc_a AS b FROM $pairs)),
+       |${p}reach AS (
+       |  SELECT a AS node, a AS lbl FROM ${p}edges
+       |  UNION
+       |  SELECT e.b AS node, r.lbl FROM ${p}reach r JOIN ${p}edges e ON e.a = r.node),
+       |${p}cl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM ${p}reach GROUP BY 1)""".stripMargin
+
+  /** Mirror of [[dupClusters]] (q104/q113) over a pair-CTE block that
+    * claims `<p>pairs`; `hashRel` is the FROM item exposing the hashes
+    * as `h`. */
+  private def sqlDupClustersOracle(pairCtes: String, p: String, hashRel: String): String =
+    s"""WITH RECURSIVE $sqlBmpBase,
+       |$pairCtes,
+       |${sqlClosureCtes(s"${p}pairs", p)},
+       |${p}mem AS (
+       |  SELECT ${p}cl.cluster_id, COUNT(*) AS n_members,
+       |         COUNT(DISTINCT h.dhash) AS n_distinct_hashes
+       |  FROM ${p}cl JOIN $hashRel ON h.doc_id = ${p}cl.doc_id GROUP BY 1),
+       |${p}ed AS (
+       |  SELECT ${p}cl.cluster_id, COUNT(*) AS n_pairs,
+       |         CAST(MAX(p.hamming) AS INTEGER) AS max_hamming
+       |  FROM ${p}pairs p JOIN ${p}cl ON ${p}cl.doc_id = p.doc_a GROUP BY 1)
+       |SELECT m.cluster_id, m.n_members, m.n_distinct_hashes,
+       |       e.n_pairs, e.max_hamming
+       |FROM ${p}mem m JOIN ${p}ed e USING (cluster_id)
+       |ORDER BY m.cluster_id""".stripMargin
+
+  /** Mirror of [[curationManifest]] (q116/q117) over a pair-CTE block
+    * that claims `<p>bk` and `<p>pairs`: the closure, the popcount-
+    * ranked rep window, the singleton anti-join and the disclosure
+    * pack; `hashRel` is the FROM item exposing the hashes as `h`. */
+  private def sqlManifestOracle(pairCtes: String, p: String, hashRel: String): String =
+    s"""WITH RECURSIVE $sqlBmpBase,
+       |$pairCtes,
+       |${sqlCapDropCte(p)},
+       |${sqlClosureCtes(s"${p}pairs", p)},
+       |${p}m AS (SELECT ${p}cl.cluster_id, ${p}cl.doc_id,
+       |              CAST(bit_count(h.dhash) AS INTEGER) AS detail
+       |       FROM ${p}cl JOIN $hashRel USING (doc_id)),
+       |${p}r AS (SELECT ${p}m.*,
+       |              row_number() OVER (PARTITION BY cluster_id
+       |                                 ORDER BY detail DESC, doc_id ASC) AS rk,
+       |              COUNT(*) OVER (PARTITION BY cluster_id) AS nm
+       |       FROM ${p}m),
+       |reps AS (
+       |  SELECT doc_id, 'cluster_rep' AS provenance, cluster_id,
+       |         CAST(nm - 1 AS BIGINT) AS n_absorbed, detail AS detail_bits
+       |  FROM ${p}r WHERE rk = 1),
+       |singles AS (
+       |  SELECT h.doc_id, 'singleton' AS provenance,
+       |         CAST(NULL AS BIGINT) AS cluster_id, CAST(0 AS BIGINT) AS n_absorbed,
+       |         CAST(bit_count(h.dhash) AS INTEGER) AS detail_bits
+       |  FROM $hashRel WHERE h.doc_id NOT IN (SELECT doc_id FROM ${p}cl))
+       |SELECT u.*, d.n_dropped_buckets, d.n_docs_in_dropped
+       |FROM (SELECT * FROM singles UNION ALL SELECT * FROM reps) u
+       |CROSS JOIN ${p}drop d
+       |ORDER BY doc_id""".stripMargin
+
   /** The [[Multimodal.dHash]] of a decoded w×h image whose pixel bytes
     * are the text-hex prefix, restated as one SQL integer expression —
     * only informative bits (9×8-grid cells whose floor-mapped source
@@ -513,23 +669,13 @@ object MultimodalQueries {
        |  FROM b WHERE isbmp)""".stripMargin
   }
 
+  /** Mirror of [[bandedHashPairs]] over the image hashes as oracle
+    * CTEs: [[sqlImageHashCte]]'s `h` plus [[sqlBandPairTail]]'s `i`
+    * instance (ibk, icapped, ipairs); needs [[sqlBmpBase]]'s `b`. */
   private val sqlImagePairCtes: String =
     s"""$sqlImageHashCte,
        |${sqlBandPairTail("h", "i")}""".stripMargin
 
-  /** Mirror of [[bandedHashPairs]] over the acoustic fingerprints as
-    * oracle CTEs (claims ah + [[sqlBandPairTail]]'s `a` instance: abk,
-    * acapped, apairs; needs [[sqlBmpBase]]'s `b` in scope — its isbmp
-    * predicate IS [[wavFpCorpus]]'s routing rule). Unlike the image
-    * hash (unrolled per constructed width), the fingerprint restates
-    * FULLY ARITHMETICALLY from the text hex: per doc, the frame-energy
-    * list e (|channel-sum| of the signed 16-bit LE samples the
-    * encode/decode round trip recovers — q86's two's-complement
-    * device), then the 64 bits as one list_transform over k with the
-    * same ⌊k·nf/65⌋ floor-mapped positions the Spark kernel reads.
-    * Bit 63 lands on the BIGINT sign bit on both sides (subset sums
-    * of distinct powers of two are exactly the signed 64-bit
-    * patterns, so the fold cannot overflow). */
   /** The [[Multimodal.audioFingerprint]] arithmetic as oracle CTEs
     * over any relation `src` carrying (doc_id, hx, ch, nf): `<p>e` is
     * the frame-energy list (|channel sum| of the signed 16-bit LE
@@ -566,6 +712,10 @@ object MultimodalQueries {
        |  FROM ${p}e)""".stripMargin
   }
 
+  /** Mirror of [[bandedHashPairs]] over the acoustic fingerprints as
+    * oracle CTEs: [[sqlAudioFpCtes]]' `ae`/`ah` plus [[sqlBandPairTail]]'s
+    * `a` instance (abk, acapped, apairs); needs [[sqlBmpBase]]'s `b`,
+    * whose isbmp predicate IS [[wavFpCorpus]]'s routing rule. */
   private val sqlAudioPairCtes: String =
     s"""${sqlAudioFpCtes(
          """(SELECT doc_id, hx, ch, LEAST(len // (2 * ch), 64) AS nf
@@ -835,50 +985,11 @@ object MultimodalQueries {
     // decision absent a quality signal is the minimum doc_id
     // (first-ingested), which IS the cluster id by the closure's
     // min-label construction — same convention as q49. The oracle
-    // restates the closure as a recursive CTE over the shared pair
-    // fragment (explicit DISTINCT subselects: under WITH RECURSIVE,
-    // DuckDB gives non-self-referencing set-op CTEs recursive-anchor
-    // semantics and stops deduplicating them).
+    // restates the closure as a recursive CTE ([[sqlClosureCtes]]) over
+    // the shared pair fragment.
     "q104_image_dup_clusters" -> Q(
-      (s, d) => {
-        val hashes = decodedHashes(s, d).persist()
-        val pairs = bandedHashPairs(hashes).persist()
-        val comps = graft.ext.Graph.connectedComponents(pairs, "doc_a", "doc_b")
-          .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-        val mem = comps.join(hashes, Seq("doc_id"))
-          .groupBy(col("cluster_id")).agg(
-            count(lit(1)).as("n_members"),
-            countDistinct(col("dhash")).as("n_distinct_hashes"))
-        val edges = pairs
-          .join(comps.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"))
-          .groupBy(col("cluster_id")).agg(
-            count(lit(1)).as("n_pairs"),
-            max(col("hamming")).as("max_hamming"))
-        mem.join(edges, Seq("cluster_id")).orderBy(col("cluster_id"))
-      },
-      s"""WITH RECURSIVE $sqlBmpBase,
-         |$sqlImagePairCtes,
-         |iedges AS (SELECT DISTINCT a, b FROM (
-         |  SELECT doc_a AS a, doc_b AS b FROM ipairs
-         |  UNION ALL
-         |  SELECT doc_b AS a, doc_a AS b FROM ipairs)),
-         |ireach AS (
-         |  SELECT a AS node, a AS lbl FROM iedges
-         |  UNION
-         |  SELECT e.b AS node, r.lbl FROM ireach r JOIN iedges e ON e.a = r.node),
-         |icl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM ireach GROUP BY 1),
-         |imem AS (
-         |  SELECT icl.cluster_id, COUNT(*) AS n_members,
-         |         COUNT(DISTINCT h.dhash) AS n_distinct_hashes
-         |  FROM icl JOIN h ON h.doc_id = icl.doc_id GROUP BY 1),
-         |ied AS (
-         |  SELECT icl.cluster_id, COUNT(*) AS n_pairs,
-         |         CAST(MAX(p.hamming) AS INTEGER) AS max_hamming
-         |  FROM ipairs p JOIN icl ON icl.doc_id = p.doc_a GROUP BY 1)
-         |SELECT m.cluster_id, m.n_members, m.n_distinct_hashes,
-         |       e.n_pairs, e.max_hamming
-         |FROM imem m JOIN ied e USING (cluster_id)
-         |ORDER BY m.cluster_id""".stripMargin),
+      (s, d) => dupClusters(decodedHashes(s, d)),
+      sqlDupClustersOracle(sqlImagePairCtes, "i", "h")),
 
     // The REAL frame-sample path under the oracle: three-frame ICO
     // containers (see icoCorpus) through sampleFramesDecoded — parse
@@ -988,51 +1099,11 @@ object MultimodalQueries {
     // branch of the multimodal->dedup bridge end-to-end with the same
     // per-cluster accounting as the image chain (member count, distinct
     // fingerprints, observed pair count, banded max pair distance) and
-    // the same min-id canonical convention. The oracle restates the
-    // closure as a recursive CTE over the shared pair fragment
-    // (explicit DISTINCT subselects — the q104 device: under WITH
-    // RECURSIVE, DuckDB gives non-self-referencing set-op CTEs
-    // recursive-anchor semantics and stops deduplicating them).
+    // the same min-id canonical convention. One Spark body
+    // ([[dupClusters]]) and one oracle template serve q104 and q113.
     "q113_audio_dup_clusters" -> Q(
-      (s, d) => {
-        val hashes = decodedAudioHashes(s, d).persist()
-        val pairs = bandedHashPairs(hashes).persist()
-        val comps = graft.ext.Graph.connectedComponents(pairs, "doc_a", "doc_b")
-          .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-        val mem = comps.join(hashes, Seq("doc_id"))
-          .groupBy(col("cluster_id")).agg(
-            count(lit(1)).as("n_members"),
-            countDistinct(col("dhash")).as("n_distinct_hashes"))
-        val edges = pairs
-          .join(comps.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"))
-          .groupBy(col("cluster_id")).agg(
-            count(lit(1)).as("n_pairs"),
-            max(col("hamming")).as("max_hamming"))
-        mem.join(edges, Seq("cluster_id")).orderBy(col("cluster_id"))
-      },
-      s"""WITH RECURSIVE $sqlBmpBase,
-         |$sqlAudioPairCtes,
-         |aedges AS (SELECT DISTINCT a, b FROM (
-         |  SELECT doc_a AS a, doc_b AS b FROM apairs
-         |  UNION ALL
-         |  SELECT doc_b AS a, doc_a AS b FROM apairs)),
-         |areach AS (
-         |  SELECT a AS node, a AS lbl FROM aedges
-         |  UNION
-         |  SELECT e.b AS node, r.lbl FROM areach r JOIN aedges e ON e.a = r.node),
-         |acl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM areach GROUP BY 1),
-         |amem AS (
-         |  SELECT acl.cluster_id, COUNT(*) AS n_members,
-         |         COUNT(DISTINCT h.dhash) AS n_distinct_hashes
-         |  FROM acl JOIN ah h ON h.doc_id = acl.doc_id GROUP BY 1),
-         |aed AS (
-         |  SELECT acl.cluster_id, COUNT(*) AS n_pairs,
-         |         CAST(MAX(p.hamming) AS INTEGER) AS max_hamming
-         |  FROM apairs p JOIN acl ON acl.doc_id = p.doc_a GROUP BY 1)
-         |SELECT m.cluster_id, m.n_members, m.n_distinct_hashes,
-         |       e.n_pairs, e.max_hamming
-         |FROM amem m JOIN aed e USING (cluster_id)
-         |ORDER BY m.cluster_id""".stripMargin),
+      (s, d) => dupClusters(decodedAudioHashes(s, d)),
+      sqlDupClustersOracle(sqlAudioPairCtes, "a", "ah h")),
 
     // The multimodal pretraining recipe end-to-end (r16 stretch ask
     // #7) — the image analogue of q100's composed chain, closing
@@ -1055,69 +1126,14 @@ object MultimodalQueries {
     // bounds the pair join also DROPS hot buckets — docs reachable only
     // through dropped buckets surface as plain 'singleton' rows, a
     // silent overstatement of uniqueness. Two accounting columns from
-    // the SAME occupancy counts ([[capDropStats]]) make the knob's
+    // the SAME occupancy counts ([[bandedPairsWithDropStats]]) make the knob's
     // recall contract visible in the artifact: n_dropped_buckets and
     // n_docs_in_dropped (docs sitting in >= 1 dropped bucket). On the
     // shipped templated BMP corpus both are far from zero — exactly the
     // disclosure the cap study demanded.
     "q116_image_curation_manifest" -> Q(
-      (s, d) => {
-        val hashes = decodedHashes(s, d).persist()
-        // one occupancy pass feeds the cap AND the disclosure (r22)
-        val (pairs, drops) = bandedPairsWithDropStats(hashes)
-        val comps = graft.ext.Graph.connectedComponents(pairs, "doc_a", "doc_b")
-          .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-        val best = max(struct(bit_count(col("dhash")).as("detail"),
-          (-col("doc_id")).as("negid")))
-        val reps = comps.join(hashes, Seq("doc_id"))
-          .groupBy(col("cluster_id")).agg(
-            count(lit(1)).as("n_members"), best.as("best"))
-          .select((-col("best.negid")).cast("long").as("doc_id"),
-            lit("cluster_rep").as("provenance"), col("cluster_id"),
-            (col("n_members") - 1).as("n_absorbed"),
-            col("best.detail").cast("int").as("detail_bits"))
-        val singles = hashes.join(comps, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), lit("singleton").as("provenance"),
-            lit(null).cast("long").as("cluster_id"),
-            lit(0L).as("n_absorbed"),
-            bit_count(col("dhash")).cast("int").as("detail_bits"))
-        singles.unionByName(reps)
-          .crossJoin(broadcast(drops)) // 1-row disclosure pack
-          .orderBy(col("doc_id"))
-      },
-      s"""WITH RECURSIVE $sqlBmpBase,
-         |$sqlImagePairCtes,
-         |${sqlCapDropCte("i")},
-         |iedges AS (SELECT DISTINCT a, b FROM (
-         |  SELECT doc_a AS a, doc_b AS b FROM ipairs
-         |  UNION ALL
-         |  SELECT doc_b AS a, doc_a AS b FROM ipairs)),
-         |ireach AS (
-         |  SELECT a AS node, a AS lbl FROM iedges
-         |  UNION
-         |  SELECT e.b AS node, r.lbl FROM ireach r JOIN iedges e ON e.a = r.node),
-         |icl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM ireach GROUP BY 1),
-         |im AS (SELECT icl.cluster_id, icl.doc_id,
-         |              CAST(bit_count(h.dhash) AS INTEGER) AS detail
-         |       FROM icl JOIN h USING (doc_id)),
-         |ir AS (SELECT im.*,
-         |              row_number() OVER (PARTITION BY cluster_id
-         |                                 ORDER BY detail DESC, doc_id ASC) AS rk,
-         |              COUNT(*) OVER (PARTITION BY cluster_id) AS nm
-         |       FROM im),
-         |reps AS (
-         |  SELECT doc_id, 'cluster_rep' AS provenance, cluster_id,
-         |         CAST(nm - 1 AS BIGINT) AS n_absorbed, detail AS detail_bits
-         |  FROM ir WHERE rk = 1),
-         |singles AS (
-         |  SELECT h.doc_id, 'singleton' AS provenance,
-         |         CAST(NULL AS BIGINT) AS cluster_id, CAST(0 AS BIGINT) AS n_absorbed,
-         |         CAST(bit_count(h.dhash) AS INTEGER) AS detail_bits
-         |  FROM h WHERE h.doc_id NOT IN (SELECT doc_id FROM icl))
-         |SELECT u.*, d.n_dropped_buckets, d.n_docs_in_dropped
-         |FROM (SELECT * FROM singles UNION ALL SELECT * FROM reps) u
-         |CROSS JOIN idrop d
-         |ORDER BY doc_id""".stripMargin),
+      (s, d) => curationManifest(decodedHashes(s, d)),
+      sqlManifestOracle(sqlImagePairCtes, "i", "h")),
 
     // The audio curation manifest — q116's composition over the
     // acoustic chain, closing the modality symmetry end-to-end (both
@@ -1128,66 +1144,11 @@ object MultimodalQueries {
     // fingerprint = how much amplitude MOVEMENT the clip carries — the
     // audio analogue of gradient richness, preferring the liveliest
     // member over near-silent variants) -> singletons + reps with
-    // absorbed-duplicate accounting. Same oracle device as q116 over
-    // the audio CTEs.
+    // absorbed-duplicate accounting. One Spark body ([[curationManifest]])
+    // and one oracle template serve q116 and q117.
     "q117_audio_curation_manifest" -> Q(
-      (s, d) => {
-        val hashes = decodedAudioHashes(s, d).persist()
-        // one occupancy pass feeds the cap AND the disclosure (r22)
-        val (pairs, drops) = bandedPairsWithDropStats(hashes) // q116's pack, audio chain
-        val comps = graft.ext.Graph.connectedComponents(pairs, "doc_a", "doc_b")
-          .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-        val best = max(struct(bit_count(col("dhash")).as("detail"),
-          (-col("doc_id")).as("negid")))
-        val reps = comps.join(hashes, Seq("doc_id"))
-          .groupBy(col("cluster_id")).agg(
-            count(lit(1)).as("n_members"), best.as("best"))
-          .select((-col("best.negid")).cast("long").as("doc_id"),
-            lit("cluster_rep").as("provenance"), col("cluster_id"),
-            (col("n_members") - 1).as("n_absorbed"),
-            col("best.detail").cast("int").as("detail_bits"))
-        val singles = hashes.join(comps, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), lit("singleton").as("provenance"),
-            lit(null).cast("long").as("cluster_id"),
-            lit(0L).as("n_absorbed"),
-            bit_count(col("dhash")).cast("int").as("detail_bits"))
-        singles.unionByName(reps)
-          .crossJoin(broadcast(drops)) // 1-row disclosure pack
-          .orderBy(col("doc_id"))
-      },
-      s"""WITH RECURSIVE $sqlBmpBase,
-         |$sqlAudioPairCtes,
-         |${sqlCapDropCte("a")},
-         |aedges AS (SELECT DISTINCT a, b FROM (
-         |  SELECT doc_a AS a, doc_b AS b FROM apairs
-         |  UNION ALL
-         |  SELECT doc_b AS a, doc_a AS b FROM apairs)),
-         |areach AS (
-         |  SELECT a AS node, a AS lbl FROM aedges
-         |  UNION
-         |  SELECT e.b AS node, r.lbl FROM areach r JOIN aedges e ON e.a = r.node),
-         |acl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM areach GROUP BY 1),
-         |am AS (SELECT acl.cluster_id, acl.doc_id,
-         |              CAST(bit_count(h.dhash) AS INTEGER) AS detail
-         |       FROM acl JOIN ah h USING (doc_id)),
-         |ar AS (SELECT am.*,
-         |              row_number() OVER (PARTITION BY cluster_id
-         |                                 ORDER BY detail DESC, doc_id ASC) AS rk,
-         |              COUNT(*) OVER (PARTITION BY cluster_id) AS nm
-         |       FROM am),
-         |reps AS (
-         |  SELECT doc_id, 'cluster_rep' AS provenance, cluster_id,
-         |         CAST(nm - 1 AS BIGINT) AS n_absorbed, detail AS detail_bits
-         |  FROM ar WHERE rk = 1),
-         |singles AS (
-         |  SELECT h.doc_id, 'singleton' AS provenance,
-         |         CAST(NULL AS BIGINT) AS cluster_id, CAST(0 AS BIGINT) AS n_absorbed,
-         |         CAST(bit_count(h.dhash) AS INTEGER) AS detail_bits
-         |  FROM ah h WHERE h.doc_id NOT IN (SELECT doc_id FROM acl))
-         |SELECT u.*, d.n_dropped_buckets, d.n_docs_in_dropped
-         |FROM (SELECT * FROM singles UNION ALL SELECT * FROM reps) u
-         |CROSS JOIN adrop d
-         |ORDER BY doc_id""".stripMargin),
+      (s, d) => curationManifest(decodedAudioHashes(s, d)),
+      sqlManifestOracle(sqlAudioPairCtes, "a", "ah h")),
 
     // SINGLE-PASS heterogeneous-corpus dedup manifest — the 100 TB
     // multimodal curation shape: ONE narrow batch map routes every
@@ -1224,26 +1185,7 @@ object MultimodalQueries {
         val drops = rep
           .map { case (k, (_, d)) => d.withColumn("kind", lit(k)) }
           .reduce(_ unionByName _)
-        val comps = graft.ext.Graph.connectedComponents(pairs, "doc_a", "doc_b")
-          .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-        val best = max(struct(bit_count(col("dhash")).as("detail"),
-          (-col("doc_id")).as("negid")))
-        val reps = comps.join(hashes, Seq("doc_id"))
-          .groupBy(col("cluster_id")).agg(
-            count(lit(1)).as("n_members"), best.as("best"),
-            min(col("kind")).as("kind")) // pairs are per-kind, so members agree
-          .select((-col("best.negid")).cast("long").as("doc_id"), col("kind"),
-            lit("cluster_rep").as("provenance"), col("cluster_id"),
-            (col("n_members") - 1).as("n_absorbed"),
-            col("best.detail").cast("int").as("detail_bits"))
-        val singles = hashes.join(comps, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("kind"), lit("singleton").as("provenance"),
-            lit(null).cast("long").as("cluster_id"),
-            lit(0L).as("n_absorbed"),
-            bit_count(col("dhash")).cast("int").as("detail_bits"))
-        singles.unionByName(reps)
-          .join(broadcast(drops), Seq("kind")) // 3-row disclosure pack
-          .orderBy(col("doc_id"))
+        keptManifest(hashes, pairs, drops, by = Seq("kind"))
       },
       s"""WITH RECURSIVE $sqlMixedBase,
          |$sqlMixedHashCtes,
@@ -1263,15 +1205,7 @@ object MultimodalQueries {
          |mp AS (SELECT doc_a, doc_b FROM mbpairs
          |       UNION ALL SELECT doc_a, doc_b FROM mipairs
          |       UNION ALL SELECT doc_a, doc_b FROM mvpairs),
-         |medges AS (SELECT DISTINCT a, b FROM (
-         |  SELECT doc_a AS a, doc_b AS b FROM mp
-         |  UNION ALL
-         |  SELECT doc_b AS a, doc_a AS b FROM mp)),
-         |mreach AS (
-         |  SELECT a AS node, a AS lbl FROM medges
-         |  UNION
-         |  SELECT e.b AS node, r.lbl FROM mreach r JOIN medges e ON e.a = r.node),
-         |mcl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM mreach GROUP BY 1),
+         |${sqlClosureCtes("mp", "m")},
          |mm2 AS (SELECT mcl.cluster_id, mcl.doc_id, h.kind,
          |               CAST(bit_count(h.dhash) AS INTEGER) AS detail
          |        FROM mcl JOIN mh h USING (doc_id)),

@@ -478,12 +478,13 @@ object StreamQueries {
     // #2 — q121's symmetry for the streaming store): the identical
     // drive loop with capPerBucket = Some(2048) — multiplicity-sized
     // for BOTH sf tiers (max (kind, band, bkey) occupancy is 1107 at
-    // sf0.1; the guard below fails loudly at the source if a testdata
-    // change ever exceeds it, q111's span-guard discipline). Within
-    // the cap, the capped path must reproduce the exact one-shot
-    // answer bit-for-bit: the capBands groupBy+broadcast stage
-    // EXECUTES on batch, store, and probe sides and must drop
-    // nothing. This hashes the capped plumbing itself — occupancy
+    // sf0.1; the guard below fails loudly if a testdata change ever
+    // exceeds it, q111's span-guard discipline — it reads the drained
+    // seen store, which holds every fingerprint of the corpus, so the
+    // corpus is decoded once, by the sink). Within the cap, the capped
+    // path must reproduce the exact one-shot answer bit-for-bit: the
+    // capBands groupBy+broadcast stage EXECUTES on the batch and store
+    // sides and must drop nothing. This hashes the capped plumbing itself — occupancy
     // counts, survivor broadcast, both join cuts — not just the
     // capless contract; the storm-FLIP semantics (what drops when a
     // bucket exceeds the cap) are StreamingSpec's pin and ScaleSoak's
@@ -491,10 +492,11 @@ object StreamQueries {
     "q123_stream_media_ingest_capped" -> Q(
       (s, d) => {
         val cap = 2048
-        val occ = MultimodalQueries.maxMediaBandOccupancy(s, d)
+        val store = mediaIngestStore(s, d, capPerBucket = Some(cap))
+        val occ = MultimodalQueries.maxMediaBandOccupancy(store)
         require(occ <= cap,
           s"q123 requires every media band bucket within cap=$cap, got max occupancy $occ")
-        mediaIngestStore(s, d, capPerBucket = Some(cap))
+        store
       },
       MultimodalQueries.sqlMediaIngestOracle)
   )

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 import graft.engine.Sinks
+import graft.queries.MultimodalQueries
 
 /** W2 (SURVEY.md §2.6) — the reference's rerun-append-upsert batch loop
   * re-expressed as Structured Streaming: a file source over the landed
@@ -255,80 +256,25 @@ object Streaming {
         } finally exactKept.unpersist(false)
       }
 
-  /** The kind-keyed band explosion of a (doc_id, kind, fp) fingerprint
-    * frame — the shared building block of [[mediaNearDupSuppressSink]]'s
-    * within-batch self-join and its store probe. The modality rides the
-    * join key, so fingerprints of different kinds (which live in
-    * different spaces) can never compare, and ONE join covers every
-    * modality. */
-  private def mediaBandKeys(h: DataFrame, idAs: String, fpAs: String): DataFrame =
-    h.select(col("doc_id").as(idAs), col("kind"), col("fp").as(fpAs),
-        explode(array((0 until 4).map(j => struct(lit(j).as("band"),
-          shiftright(col("fp"), 16 * j).bitwiseAND(lit(0xFFFFL)).as("bkey"))): _*)).as("bk"))
-      .select(col(idAs), col("kind"), col(fpAs), col("bk.band"), col("bk.bkey"))
-
-  /** Occupancy cap over a kind-keyed band frame, in the r18 skew-safe
-    * shape ([[graft.queries.MultimodalQueries]]'s bandedHashPairs): a
-    * partial-aggregable groupBy count whose <=cap survivor list —
-    * bounded at kinds·4·2^16 rows by the keyspace — broadcasts back,
-    * so hot-bucket rows drop map-side without shuffling. */
-  private def capBands(bands: DataFrame, cap: Int): DataFrame = {
-    val keep = bands.groupBy(col("kind"), col("band"), col("bkey"))
-      .agg(count(lit(1)).as("_n")).where(col("_n") <= cap)
-      .select(col("kind"), col("band"), col("bkey"))
-    bands.join(broadcast(keep), Seq("kind", "band", "bkey"))
-  }
-
-  /** Asymmetric banded probe of a fingerprint batch against the
-    * accumulated seen store: batch docs with a STRICTLY-LOWER-id stored
-    * same-kind fingerprint within Hamming 4 through >= 1 shared band.
-    * One equi-join on (kind, band, bkey) — the multimodal transplant of
-    * [[graft.queries.TextQueries.lshProbe]]; the strict `<` keeps a
-    * crash-replayed batch from being suppressed by its own earlier
-    * attempt's store entries (and makes the suppression decision a
-    * function of the lower-id SET — the order-invariance the q122 gate
-    * states).
-    *
-    * `cap`: the production occupancy knob. The probe's quadratic unit
-    * is (batch bucket occupancy) x (store bucket occupancy), and on a
-    * storm corpus the store side of a hot bucket grows with the corpus;
-    * Some(cap) drops buckets above `cap` on BOTH sides from the same
-    * per-side occupancy counts the pair operators use ([[capBands]] —
-    * computed from the store scan the probe already pays for, no extra
-    * state). Recall trade as documented on every capped-family member:
-    * near-dups reachable only through hot buckets are ADMITTED, and
-    * the N-batch == one-shot equivalence the q122 gate hashes no
-    * longer holds (a bucket a one-shot run would drop forms pairs
-    * while still small incrementally) — size the cap to the expected
-    * duplicate multiplicity, or leave None for the exact contract. */
-  private[graft] def mediaBandProbe(batchFp: DataFrame, storeFp: DataFrame,
-                                    cap: Option[Int] = None): DataFrame = {
-    val cut = (b: DataFrame) => cap.fold(b)(c => capBands(b, c))
-    cut(mediaBandKeys(batchFp, "doc_a", "fa"))
-      .join(cut(mediaBandKeys(storeFp, "doc_b", "fb")), Seq("kind", "band", "bkey"))
-      .where(col("doc_b") < col("doc_a") &&
-        bit_count(col("fa").bitwiseXOR(col("fb"))) <= 4)
-      .select(col("doc_a").as("doc_id")).distinct()
-  }
-
   /** Streaming multimodal ingest (q122) — the incremental form of the
     * q119 manifest's admission decision: every micro-batch of opaque
     * media payloads (columns `doc_id`, `media` BINARY) is fingerprinted
     * by ITS modality's kernel in one narrow pass
     * ([[graft.ext.Multimodal.mediaHashes]]), near-dup-checked within
-    * the batch and against the accumulated SEEN store via kind-keyed
-    * banded joins (never all-pairs), and every row lands in the store
-    * with an `admitted` flag. Per batch:
+    * the batch and against the accumulated SEEN store via ONE
+    * kind-keyed banded join (never all-pairs), and every row lands in
+    * the store with an `admitted` flag. Per batch:
     *
     *   1. fingerprint the batch (bmp/ico lead-frame dHash, wav
     *      sign-of-energy-delta; undecodable payloads get kind 'stub',
     *      null fp — admitted by definition, nothing perceptual to
     *      compare);
-    *   2. within-batch suppression: the banded self-join, higher
-    *      doc_id of each Hamming<=4 same-kind pair loses;
-    *   3. store probe ([[mediaBandProbe]]): batch docs with a
-    *      lower-id stored near-dup lose;
-    *   4. ALL batch rows (doc_id, kind, fp, admitted) upsert into the
+    *   2. suppression in ONE kind-keyed banded join
+    *      ([[graft.queries.MultimodalQueries.hammingLosers]] with the
+    *      batch and the store as witnesses): a batch doc with a
+    *      same-kind LOWER-id fingerprint within Hamming 4 through a
+    *      shared band — in the batch or in the store — loses;
+    *   3. ALL batch rows (doc_id, kind, fp, admitted) upsert into the
     *      partition-scoped store keyed on doc_id.
     *
     * The store is a SEEN store (every fingerprint ever observed, not
@@ -352,9 +298,11 @@ object Streaming {
     * `capPerBucket`: None (default) runs capless — the exact,
     * order-invariant contract the q122 gate hashes. Some(cap) bounds
     * the quadratic unit on storm corpora by dropping over-cap band
-    * buckets from the self-join and the probe (the skew-safe
-    * groupBy+broadcast shape, see [[capBands]]/[[mediaBandProbe]]),
-    * trading recall exactly as the batch operator's knob does
+    * buckets from the batch side and the store side, each by its own
+    * occupancy counts (the skew-safe groupBy+broadcast shape,
+    * [[graft.queries.MultimodalQueries.capBands]]; cap >= 2, checked
+    * when the sink is built), trading recall exactly as the batch
+    * operator's knob does
     * ([[graft.queries.MultimodalQueries.bandedHashPairs]]): near-dups
     * reachable only through hot buckets are admitted, and N-batch ==
     * one-shot no longer holds. Size it to the expected duplicate
@@ -366,7 +314,8 @@ object Streaming {
     * only the buckets the batch touches. State is the store itself. */
   def mediaNearDupSuppressSink(stream: DataFrame, storePath: String,
                                numBuckets: Int = 16,
-                               capPerBucket: Option[Int] = None): DataStreamWriter[Row] =
+                               capPerBucket: Option[Int] = None): DataStreamWriter[Row] = {
+    capPerBucket.foreach(MultimodalQueries.requireCap)
     stream.writeStream
       .trigger(Trigger.AvailableNow())
       .outputMode("append")
@@ -382,19 +331,14 @@ object Streaming {
           .toDF().persist()
         try {
           val fp = hashes.where(col("fp").isNotNull)
-          val cut = (b: DataFrame) => capPerBucket.fold(b)(c => capBands(b, c))
           // within-batch self-join + store probe FUSED into ONE
           // kind-keyed band join (r22, guide §2.4): both losers are
           // "∃ same-kind fingerprint with a LOWER id within Hamming 4
           // through a shared band" — the only difference was where the
           // witness lived (batch vs store), so the b-side is simply the
-          // union of the two witness frames and the suppression set is
-          // identical (the old self-join's doc_a < doc_b with loser
-          // doc_b is this orientation's doc_b < doc_a with loser doc_a).
-          // The occupancy cap stays PER SIDE — cut(batch) and
-          // cut(store) exactly as before — so the capped (q123) path's
-          // storm-flip semantics are bit-identical; what disappears is
-          // one whole join + distinct + union per trigger.
+          // union of the two witness frames. The occupancy cap stays PER
+          // FRAME (batch and store each cut by their own counts), which
+          // is the capped (q123) path's storm-flip semantics.
           //
           // committed-store check + crash recovery in one step (r18
           // ADVICE, the incrementalCurationSink fix transplanted): a
@@ -404,17 +348,11 @@ object Streaming {
           // admitted=true flags — and a crashed half-creation (dir, no
           // committed meta) as readable, wedging every retry on parquet
           // schema inference
-          val bBatch = cut(mediaBandKeys(fp, "doc_b", "fb"))
-          val bSide = if (Sinks.recoverUpsertStore(s, storePath))
-            bBatch.unionByName(cut(mediaBandKeys(
-              Sinks.readUpsertStore(s, storePath).where(col("fp").isNotNull),
-              "doc_b", "fb")))
-          else bBatch
-          val suppressed = cut(mediaBandKeys(fp, "doc_a", "fa"))
-            .join(bSide, Seq("kind", "band", "bkey"))
-            .where(col("doc_b") < col("doc_a") &&
-              bit_count(col("fa").bitwiseXOR(col("fb"))) <= 4)
-            .select(col("doc_a").as("doc_id")).distinct()
+          val witnesses = if (Sinks.recoverUpsertStore(s, storePath))
+            Seq(fp, Sinks.readUpsertStore(s, storePath).where(col("fp").isNotNull))
+          else Seq(fp)
+          val suppressed = MultimodalQueries
+            .hammingLosers(fp, witnesses, Seq("kind"), capPerBucket)
             .withColumn("_s", lit(true))
           val out = hashes.join(suppressed, Seq("doc_id"), "left")
             .select(col("doc_id"), col("kind"), col("fp"),
@@ -423,6 +361,7 @@ object Streaming {
             orderCol = None, numBuckets = numBuckets)
         } finally { hashes.unpersist(false); () }
       }
+  }
 
   /** Incremental curation — the staged batch pipeline
     * ([[graft.queries.TextQueries.curatedDocsOf]]) re-expressed as a
@@ -747,8 +686,9 @@ object Streaming {
     * returns 0 (idempotence).
     *
     * `capPerBucket` mirrors the sink's knob for storm corpora (the
-    * banded self-join's occupancy bound, same recall trade); leave None
-    * to converge the exact contract the q122 gate hashes.
+    * banded self-join's occupancy bound, same recall trade, cap >= 2
+    * checked before the fence is taken); leave None to converge the
+    * exact contract the q122 gate hashes.
     *
     * Cost shape: the loser pass is the kind-keyed banded self-join over
     * the store — O(colliding candidates), never all-pairs — and the
@@ -758,19 +698,15 @@ object Streaming {
     * of landing between the read and the flip. Returns the number of
     * rows demoted. */
   def compactMediaStore(spark: SparkSession, storePath: String,
-                        capPerBucket: Option[Int] = None): Long =
+                        capPerBucket: Option[Int] = None): Long = {
+    capPerBucket.foreach(MultimodalQueries.requireCap)
     Sinks.withStoreFences(spark, Seq(storePath)) {
       if (!Sinks.recoverUpsertStoreLocked(spark, storePath)) 0L
       else {
         val store = Sinks.readUpsertStore(spark, storePath)
         val fp = store.where(col("fp").isNotNull)
           .select(col("doc_id"), col("kind"), col("fp"))
-        val cut = (b: DataFrame) => capPerBucket.fold(b)(c => capBands(b, c))
-        val losers = cut(mediaBandKeys(fp, "doc_a", "fa"))
-          .join(cut(mediaBandKeys(fp, "doc_b", "fb")), Seq("kind", "band", "bkey"))
-          .where(col("doc_b") < col("doc_a") &&
-            bit_count(col("fa").bitwiseXOR(col("fb"))) <= 4)
-          .select(col("doc_a").as("doc_id")).distinct()
+        val losers = MultimodalQueries.hammingLosers(fp, Seq(fp), Seq("kind"), capPerBucket)
         // persist + count materializes the demotion set BEFORE the
         // merge mutates the files its lineage reads (the compact's
         // established read-then-rewrite discipline)
@@ -788,6 +724,7 @@ object Streaming {
         } finally { demote.unpersist(false); () }
       }
     }
+  }
 
   /** foreachBatch upsert sink: every micro-batch merges into the target
     * parquet with last-write-wins per key — the streaming form of the

@@ -755,9 +755,10 @@ class PlanAuditSpec extends SparkSpec {
       "never an all-pairs stage")
   }
 
-  test("mediaBandProbe (streaming media ingest): ONE kind-keyed banded join, never all-pairs") {
-    // the multimodal transplant of the lshProbe pin: the store side is
-    // corpus-sized, so the per-batch probe must stay a single equi-join
+  test("hammingLosers (streaming media sink): ONE kind-keyed banded join, never all-pairs") {
+    // the multimodal transplant of the lshProbe pin, over the loser form
+    // the sink runs per trigger: the store witness is corpus-sized, so
+    // within-batch and store suppression must stay a single equi-join
     // over (kind, band, bkey) — the modality rides the join key so
     // fingerprints of different kinds never compare and one join covers
     // every modality
@@ -765,7 +766,9 @@ class PlanAuditSpec extends SparkSpec {
     val fp = spark.range(1000).select(col("id").as("doc_id"),
       when(col("id") % 2 === 0, "bmp").otherwise("wav").as("kind"),
       xxhash64(col("id")).as("fp"))
-    val probe = graft.streaming.Streaming.mediaBandProbe(fp.limit(10), fp)
+    val batch = fp.limit(10)
+    val probe = graft.queries.MultimodalQueries.hammingLosers(
+      batch, Seq(batch, fp), Seq("kind"), cap = None)
     probe.count()
     val p = probe.queryExecution.executedPlan.toString
     val joins = "(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)".r.findAllIn(p).length

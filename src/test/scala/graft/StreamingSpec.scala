@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.engine.Sinks
+import graft.queries.MultimodalQueries
 import graft.streaming.Streaming
 
 /** W2: streaming dedup / window / upsert over a file source, driven with
@@ -1363,13 +1364,14 @@ class StreamingSpec extends SparkSpec {
       s"the recovered store must still suppress the cross-batch replica: $flags")
   }
 
-  test("mediaBandProbe: a SUPPRESSED stored doc still suppresses its own later near-replicas (seen-store semantics)") {
+  test("hammingLosers: a SUPPRESSED stored doc still suppresses its own later near-replicas (seen-store semantics)") {
     // fp1 = 0; fp2 = bit 0 (near fp1: shared bands 1-3, Hamming 1 —
     // doc 2 was suppressed by doc 1 at ingest); fp3 = bits
     // {0,16,32,48,62}: Hamming 4 from fp2 with a shared band (band 0 =
     // 0x0001), but NO shared band with fp1 — so an admitted-only store
-    // would wrongly admit doc 3. The probe must run against the full
-    // seen store and suppress it through the suppressed doc 2.
+    // would wrongly admit doc 3. The sink's loser join (batch + store
+    // as witnesses) must read the full seen store and suppress it
+    // through the suppressed doc 2.
     import spark.implicits._
     val fp3 = (1L << 0) | (1L << 16) | (1L << 32) | (1L << 48) | (1L << 62)
     val mk = (rows: Seq[(Long, Long)]) =>
@@ -1377,11 +1379,84 @@ class StreamingSpec extends SparkSpec {
     val seen = mk(Seq(1L -> 0L, 2L -> 1L))
     val admittedOnly = mk(Seq(1L -> 0L))
     val batch = mk(Seq(3L -> fp3))
-    assert(Streaming.mediaBandProbe(batch, admittedOnly).count() == 0,
+    val losers = (store: org.apache.spark.sql.DataFrame) =>
+      MultimodalQueries.hammingLosers(batch, Seq(batch, store), Seq("kind"), cap = None)
+    assert(losers(admittedOnly).count() == 0,
       "precondition: the admitted row alone cannot reach doc 3")
-    val hits = Streaming.mediaBandProbe(batch, seen).collect().map(_.getLong(0))
+    val hits = losers(seen).collect().map(_.getLong(0))
     assert(hits.toSeq == Seq(3L),
       s"the suppressed stored fingerprint must suppress the replica: ${hits.mkString(",")}")
+  }
+
+  test("hammingLosers ≡ bandedHashPairs: the compact's losers are, per kind, the higher-id side of the batch pairs at every cap") {
+    // one constructed (doc_id, kind, fp) frame, the same fingerprints
+    // under two kinds with interleaved ids. Per kind: a HOT group of 5
+    // docs (H with one low bit flipped: bands 1-3 shared, occupancy 5,
+    // Hamming 2 apart) and a cold trio around G — G^bit20 is Hamming 1
+    // from G through band 2 (occupancy 2), G^(0x1F << 32) shares bands
+    // 0, 1 and 3 with G but sits at Hamming 5, so only the verify
+    // rejects it. Cap 2 drops the hot buckets; cap 8 and capless keep
+    // them — unless kinds leak into each other's occupancy (10 > 8).
+    import spark.implicits._
+    val h = 0x0123456789ABCDEFL
+    val g = 0x7E5D3C2B1A098877L
+    def kindRows(kind: String, base: Long): Seq[(Long, String, Long)] =
+      (0 until 5).map(i => (base + 2 * i, kind, h ^ (1L << i))) ++
+        Seq((base + 20, kind, g), (base + 22, kind, g ^ (1L << 20)),
+          (base + 24, kind, g ^ (0x1FL << 32)))
+    val fp = (kindRows("bmp", 100) ++ kindRows("wav", 101)).toDF("doc_id", "kind", "fp")
+    def batchLosers(cap: Option[Int]): Set[Long] = Seq("bmp", "wav").flatMap { k =>
+      MultimodalQueries.bandedHashPairs(
+          fp.where(col("kind") === k).select(col("doc_id"), col("fp").as("dhash")),
+          cap = cap.getOrElse(Int.MaxValue))
+        .select(col("doc_b")).collect().map(_.getLong(0))
+    }.toSet
+    def compactLosers(cap: Option[Int]): Set[Long] = {
+      val store = s"${tmpDir("media_kernel")}/store"
+      Sinks.upsertParquetPartitioned(spark, fp.withColumn("admitted", lit(true)), store,
+        Seq("doc_id"), orderCol = None, numBuckets = 2)
+      val n = Streaming.compactMediaStore(spark, store, capPerBucket = cap)
+      val demoted = Sinks.readUpsertStore(spark, store).where(!col("admitted"))
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+      assert(n == demoted.size, s"compact count $n vs demoted rows $demoted")
+      demoted
+    }
+    // q123's guard reads the same kind-keyed occupancy: 5, never the 10
+    // a kind-blind count would give; a frame with no fingerprint reads 0
+    assert(MultimodalQueries.maxMediaBandOccupancy(fp) == 5L)
+    assert(MultimodalQueries.maxMediaBandOccupancy(fp.where(lit(false))) == 0L)
+    val cold = Set(122L, 123L)
+    val all = cold ++ Set(102L, 104L, 106L, 108L, 103L, 105L, 107L, 109L)
+    for ((cap, expected) <- Seq(None -> all, Some(2) -> cold, Some(8) -> all)) {
+      val batch = batchLosers(cap)
+      assert(batch == expected, s"cap $cap: batch pairs' higher-id side $batch, expected $expected")
+      val compact = compactLosers(cap)
+      assert(compact == batch, s"cap $cap: compact losers $compact vs batch $batch")
+    }
+  }
+
+  test("mediaNearDupSuppressSink / compactMediaStore: capPerBucket < 2 is rejected when built, with bandedHashPairs' message") {
+    // at cap 1 no bucket can hold a pair and at cap 0 none survives, so
+    // suppression would silently switch off; the knob is checked before
+    // any trigger runs (and before the compact takes its fence — on a
+    // missing store it would otherwise return 0 without a word)
+    val stream = spark.readStream
+      .schema(StructType(Seq(StructField("doc_id", LongType),
+        StructField("media", BinaryType))))
+      .parquet(tmpDir("media_badcap_in").toString)
+    val store = s"${tmpDir("media_badcap")}/store"
+    for (c <- Seq(1, 0)) {
+      val msg = s"a pair needs bucket occupancy >= 2, got cap $c"
+      val sink = intercept[IllegalArgumentException](
+        Streaming.mediaNearDupSuppressSink(stream, store, capPerBucket = Some(c)))
+      assert(sink.getMessage.contains(msg), sink.getMessage)
+      val compact = intercept[IllegalArgumentException](
+        Streaming.compactMediaStore(spark, store, capPerBucket = Some(c)))
+      assert(compact.getMessage.contains(msg), compact.getMessage)
+      val batch = intercept[IllegalArgumentException](
+        MultimodalQueries.bandedHashPairs(spark.emptyDataFrame, cap = c))
+      assert(batch.getMessage == sink.getMessage, "one message for the one knob")
+    }
   }
 
   test("dropRedeliveries: identical re-deliveries collapse; divergent payloads fail loudly") {
